@@ -18,7 +18,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf, udtf
 
-from ..io import load
+from ..io import load, width
 from ..registry import query
 from ..sources.listing import glob_to_regex
 
@@ -336,9 +336,7 @@ def udf_grouped_map(spark, sf_dir):
     # 1M-row pandas pass coalesced onto 2 tasks). An explicit
     # repartition on the SAME key is reused by the groupBy — still one
     # exchange — and scales with the session's core count.
-    ev = ev.repartition(
-        spark.sparkContext.defaultParallelism, "user_id"
-    )
+    ev = ev.repartition(width(spark), "user_id")
     return ev.groupBy("user_id").applyInPandas(
         center,
         "user_id long, event_id long, cents long, delta_from_mean6 double",

@@ -41,34 +41,62 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+#: compute-per-byte classes for ``width``'s ``cost`` argument
+OUTER_PRODUCT = 12
+QUADRATIC = 48
+
+
+def width(spark: SparkSession, nbytes: int | None = None, cost: int = 1) -> int:
+    """Task width for a stage over an input of ``nbytes`` on-disk bytes.
+
+    The one parallelism policy: every spread, slice cap and fan-out in
+    the package asks here, and nothing else reads
+    ``defaultParallelism``. Unknown or non-local input (``nbytes``
+    None or 0) gets the full session width: a real multi-file scan is
+    already parallel, and at scale a full-width stage is the safe
+    shape. A local input whose ``nbytes * cost`` is under 3 MB gets
+    width 1, meaning "do not spread": the fixture tables are single
+    row groups, so their scans yield one partition, and below that
+    size one extra round-robin exchange costs more than the
+    parallelism it buys (measured: ``llm_knn_numpy``'s spread cost
+    1.62x at sf0.1 / 0.8 MB, and was required at sf1 / 5.9 MB, where
+    the single row group otherwise ran one-threaded).
+
+    ``cost`` is the caller's compute per scanned byte:
+
+    - 1 for linear operators (3 MB gate);
+    - ``OUTER_PRODUCT`` (256 KB gate): a per-row dim x dim outer
+      product does dim**2 = 4096 multiplies per 64-dim row, compute
+      64x the scanned bytes, and unspread it ran as one 1.2 s
+      ``mapInPandas`` task at sf0.1;
+    - ``QUADRATIC`` (64 KB gate): candidate volume grows with the
+      square of the rows per block, so bytes understate the work; the
+      unspread 2.7M-pair levenshtein pass ran as one 1.5 s task.
+    """
+    if nbytes and nbytes * cost < 3 << 20:
+        return 1
+    return spark.sparkContext.defaultParallelism
+
+
 def load_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """``load`` + round-robin repartition to the session's parallelism.
+    """``load`` + round-robin repartition to the full ``width``.
 
     The fixture parquet files are written as a SINGLE row group, so a
     scan yields one partition no matter what
     ``spark.sql.files.maxPartitionBytes`` says — any expression-heavy
     pipeline downstream (regex, md5, json parsing, shingle explode)
     would run single-threaded. One small shuffle up front buys a
-    32-way pipeline. On a real multi-file table the scan is already
+    full-width pipeline. On a real multi-file table the scan is already
     parallel and callers at cluster scale would use plain ``load``;
     the repartition here is the local-fixture analogue of that
     parallelism, not a pattern to ship extra shuffles at 100 TB.
     """
-    df = load(spark, sf_dir, name)
-    return df.repartition(spark.sparkContext.defaultParallelism)
+    return load(spark, sf_dir, name).repartition(width(spark))
 
 
 def table_bytes(sf_dir: str, name: str) -> int:
-    """On-disk size of a fixture table, 0 if it cannot be stat'ed.
-
-    Spread gates use this to skip the round-robin shuffle when the
-    input is too small for parallelism to pay for the exchange
-    (measured: llm_knn_numpy's spread costs 1.62× at sf0.1 / 0.8 MB
-    but is required at sf1 / 5.9 MB, where the single row group would
-    otherwise run one-threaded). Non-local / multi-file tables return
-    0 → no spread: a real multi-file scan is already parallel and an
-    extra full shuffle would only add cost at scale.
-    """
+    """On-disk size of a fixture table, 0 if it cannot be stat'ed
+    (the ``nbytes`` input of ``width``, which holds the spread rule)."""
     import os
 
     path = f"{sf_dir}/{name}.parquet"
@@ -100,7 +128,7 @@ def local_rows_df(
     spark: SparkSession, rows, schema, slices: int | None = None
 ) -> DataFrame:
     """``createDataFrame`` for driver-local row lists WITHOUT the
-    defaultParallelism fan-out.
+    full-width fan-out.
 
     ``spark.createDataFrame(rows)`` parallelizes into
     defaultParallelism slices even for a 1-row list; every action on
@@ -113,9 +141,7 @@ def local_rows_df(
     driver-held WORK ITEMS (e.g. file paths fanned out one task per
     path batch) pass ``slices`` explicitly.
     """
-    n = slices or max(1, min(
-        len(rows) // 10_000 + 1, spark.sparkContext.defaultParallelism
-    ))
+    n = slices or min(len(rows) // 10_000 + 1, width(spark))
     if not rows:
         return spark.createDataFrame([], schema)
     return spark.createDataFrame(

@@ -13,7 +13,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..exact import sum_exact, sum_exact_sql, sum_pinned
-from ..io import load, table_bytes
+from ..io import load, table_bytes, width
 from ..registry import query
 
 
@@ -276,11 +276,9 @@ def agg_median(spark, sf_dir):
     li = load(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_extendedprice"
     )
-    # spread only when the single-row-group fixture is big enough for
-    # the exchange to pay (same gate + threshold as llm_knn_numpy:
-    # measured 1.62x overhead at sf0.1 when applied unconditionally)
-    if table_bytes(sf_dir, "lineitem") >= 3 << 20:
-        li = li.repartition(spark.sparkContext.defaultParallelism)
+    tasks = width(spark, table_bytes(sf_dir, "lineitem"))
+    if tasks > 1:
+        li = li.repartition(tasks)
     return (
         li
         .groupBy("l_returnflag")

@@ -395,7 +395,7 @@ def _edges(spark, sf_dir) -> DataFrame:
 
 #: bounded (size-1) cache of the persisted symmetric edge set + degree
 #: vector shared by the iterative graph family (pagerank / LPA /
-#: modularity). Keyed on (SparkContext, sf_dir, n_part); inserting a
+#: modularity). Keyed on (SparkContext, sf_dir, n_part, col); inserting a
 #: new key UNPERSISTS the previous entry, so a session holds at most
 #: one cached graph regardless of how many graph keys run — the
 #: leak-per-invocation the per-call ``.persist()`` pattern had is gone,
@@ -403,23 +403,18 @@ def _edges(spark, sf_dir) -> DataFrame:
 _GRAPH_BASE_CACHE: dict = {}
 
 
-#: size-1 memo of the layout decision (pure metadata, no Spark state)
+#: size-1 memo of the layout decision (pure metadata, no Spark state),
+#: keyed on every input the decision reads
 _GRAPH_LAYOUT_CACHE: dict = {}
 
 
 def _graph_layout(spark, sf_dir) -> tuple[int, str]:
     """(n_part, partition column) for the cached edge set.
 
-    **n_part is derived from the edge build's INPUT SIZE, not from a
-    core-count constant** (r14; guide §2.4 scale-adaptive
-    partitioning): the r13 form ``defaultParallelism // 4, floor 8``
-    ran the Pregel rounds 8-wide at BOTH 8 and 32 cores at every SF —
-    the r14 sf1 scaling proof measured 24 of 32 cores idle. One
-    partition per ~4 MB of the lineitem fact (the edge build's driver)
-    reproduces the r13-measured optimum at sf0.1 (10.8 MB → floor 8,
-    where 32 partitions measured 4.0 s vs 2.6 s on 16k groups) and
-    widens with the data (sf1: 108 MB → 27); non-local / unstat-able
-    inputs fall back to full parallelism, the cluster-correct default.
+    **n_part is the session's live ``spark.sql.shuffle.partitions``**:
+    that is the width EnsureRequirements compares the per-round joins
+    against, so edges hashed at any other count are re-shuffled every
+    Pregel round.
 
     **Partition column is gated on a PROVABLE node-count bound**: node
     ids are customer keys plus offset supplier keys, so
@@ -433,17 +428,11 @@ def _graph_layout(spark, sf_dir) -> tuple[int, str]:
     edges, so the layout stays ``src`` (the r13 / 100 TB shape:
     vector-sized exchanges per round, edges never move).
     """
-    dp = spark.sparkContext.defaultParallelism
-    key = (id(spark.sparkContext), str(sf_dir), dp)
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    key = (id(spark.sparkContext), str(sf_dir), n_part, _BC_GATE_ROWS)
     hit = _GRAPH_LAYOUT_CACHE.get(key)
     if hit is not None:
         return hit
-    from ..io import table_bytes
-
-    tb = table_bytes(sf_dir, "lineitem")
-    n_part = dp if not tb else max(
-        min(dp, tb // (4 << 20)), max(dp // 4, 8)
-    )
     # |V| bound from parquet FOOTER row counts (driver-side, ~ms —
     # a Spark count here would pay two relation builds per graph key);
     # non-local / non-single-file tables fall back to the scale-safe
@@ -628,13 +617,9 @@ def graph_pagerank(spark, sf_dir):
     rounds a periodic localCheckpoint would bound plan size.
     Symmetrized edges mean no dangling-mass correction is needed.
 
-    The cached edge set is re-hashed on src into defaultParallelism/4
-    partitions (floor 8): the per-round contribution aggregation is
-    16 k groups over ~1 M rows, where 32+ shuffle-partition tasks are
-    overhead-bound (measured 2.6 s vs 4.0 s at sf0.1), and src-hash
-    partitioning lets the degree aggregation reuse the exchange. The
-    divisor scales the count with cluster size, so a 1000-executor
-    deployment still gets one partition per few cores rather than 8.
+    The edge set is cached hash-partitioned on the `_graph_layout`
+    column at the session's shuffle-partition count, so the rounds
+    find it already partitioned at the width they ask for.
     """
     edges, deg = _graph_base(spark, sf_dir)
     n = deg.count()
@@ -708,7 +693,6 @@ def parquet_meta(spark, sf_dir):
     """
     import os
 
-    sc = spark.sparkContext
     listed = sorted(
         p
         for p in __import__("glob").glob(f"{sf_dir}/*.parquet")
@@ -722,11 +706,11 @@ def parquet_meta(spark, sf_dir):
     )
     if not listed:  # empty dir: empty result, not an infer-schema crash
         return spark.createDataFrame([], _META_SCHEMA)
-    from ..io import local_rows_df
+    from ..io import local_rows_df, width
 
     paths_df = local_rows_df(
         spark, [(p,) for p in listed], "path string",
-        slices=min(len(listed), sc.defaultParallelism),
+        slices=min(len(listed), width(spark)),
     )
 
     def read_footers(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1329,15 +1313,19 @@ def _lpa_labels(spark, sf_dir):
     3-round propagation ONCE instead of twice (the rounds dominate
     both keys' wall)."""
     edges, deg = _graph_base(spark, sf_dir)
-    key = (id(spark.sparkContext), str(sf_dir))
+    key = (id(spark.sparkContext), str(sf_dir), *_graph_layout(spark, sf_dir))
     hit = _LPA_CACHE.get(key)
     if hit is not None:
         try:
             # same trap as _GRAPH_BASE_CACHE: an external clearCache()
             # deregisters the plan while is_cached lies — probe the
-            # real CacheManager and re-persist on a stale hit
+            # real CacheManager and re-persist on a stale hit. Populate
+            # the edge cache first: a frame cached over a not-yet-filled
+            # cache sees no output partitioning, and its rounds would
+            # re-shuffle the edges on nnode.
             cm = spark._jsparkSession.sharedState().cacheManager()
             if cm.lookupCachedData(hit._jdf).isEmpty():
+                deg.count()
                 hit.persist()
             return hit, edges
         except Exception:
@@ -1440,12 +1428,13 @@ def graph_label_prop(spark, sf_dir):
     fingerprint); -1 counts nodes still unreached after 3 hops.
 
     Scale shape (the Pregel contract shared with graph_pagerank): the
-    edge set is built once, re-hashed on src, and CACHED — it never
-    moves again; each round ships only the |nodes|-row label vector
-    (broadcast here; at node counts past broadcast size it shuffles
-    TO the stationary edges), and the mode-aggregation output shrinks
-    to |nodes| rows before the next round. Three bounded rounds keep
-    lineage finite without checkpoint management.
+    edge set is built once, hash-partitioned on the `_graph_layout`
+    column, and CACHED — it never moves again; each round ships only
+    the |nodes|-row label vector (broadcast here; at node counts past
+    broadcast size it shuffles TO the stationary edges), and the
+    mode-aggregation output shrinks to |nodes| rows before the next
+    round. Three bounded rounds keep lineage finite without checkpoint
+    management.
     """
     labels, _edges = _lpa_labels(spark, sf_dir)
     final = labels.select(

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..io import load, table_bytes
+from ..io import QUADRATIC, load, table_bytes, width
 from ..registry import query
 
 
@@ -346,7 +346,7 @@ def join_range_bucketed(spark, sf_dir):
     nested-loop join would scan at 100 TB. Pairs can't duplicate: a
     shipdate lives in exactly one bucket.
     """
-    width = 90  # bucket width == window length → ≤ 2 buckets per window
+    days = 90  # bucket width == window length → ≤ 2 buckets per window
     o = (
         load(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") % 1000 == 0)
@@ -357,17 +357,17 @@ def join_range_bucketed(spark, sf_dir):
     # every lineitem row out to its bucket's order population (~20x
     # candidate pairs) and that compute otherwise runs on the scan's
     # 1-3 partitions (profiled r13: a 1.75 s 3-task join job on a
-    # 32-core session). Same gate + threshold as agg_median /
-    # llm_knn_numpy so a tiny input skips the exchange.
-    if table_bytes(sf_dir, "lineitem") >= 3 << 20:
-        li = li.repartition(spark.sparkContext.defaultParallelism)
+    # 32-core session).
+    tasks = width(spark, table_bytes(sf_dir, "lineitem"))
+    if tasks > 1:
+        li = li.repartition(tasks)
     epoch = F.lit("1970-01-01")
-    o_bucket = F.floor(F.datediff(F.col("o_orderdate"), epoch) / width)
+    o_bucket = F.floor(F.datediff(F.col("o_orderdate"), epoch) / days)
     o_b = o.withColumn(
         "bucket", F.explode(F.array(o_bucket, o_bucket + 1))
     )
     li_b = li.withColumn(
-        "bucket", F.floor(F.datediff(F.col("l_shipdate"), epoch) / width)
+        "bucket", F.floor(F.datediff(F.col("l_shipdate"), epoch) / days)
     )
     return (
         li_b.join(o_b, "bucket")
@@ -375,7 +375,7 @@ def join_range_bucketed(spark, sf_dir):
             (F.col("l_shipdate") >= F.col("o_orderdate"))
             & (
                 F.col("l_shipdate")
-                < F.col("o_orderdate") + F.expr(f"INTERVAL {width} DAY")
+                < F.col("o_orderdate") + F.expr(f"INTERVAL {days} DAY")
             )
         )
         .groupBy(F.date_trunc("month", "o_orderdate").alias("order_month"))
@@ -482,16 +482,13 @@ def join_fuzzy_match(spark, sf_dir):
     p = load(spark, sf_dir, "part").select(
         "p_partkey", "p_name", "p_brand", "p_type"
     )
-    # spread the probe side: candidate volume is Σ|block|² — QUADRATIC
-    # in rows per block — so even a small-bytes part table generates
-    # real DP compute (profiled r13: the whole 2.7M-pair levenshtein
-    # pass ran as ONE 1.5 s task off the single-row-group scan). The
-    # gate is lower than the byte gates guarding linear operators
-    # because bytes understate quadratic fan-out; a truly tiny table
-    # still skips the exchange. Build side stays unspread (broadcast).
+    # spread the probe side at the quadratic cost class: candidate
+    # volume is Σ|block|², so even a small-bytes part table generates
+    # real DP compute. Build side stays unspread (broadcast).
     probe = p
-    if table_bytes(sf_dir, "part") >= 64 << 10:
-        probe = p.repartition(spark.sparkContext.defaultParallelism)
+    tasks = width(spark, table_bytes(sf_dir, "part"), QUADRATIC)
+    if tasks > 1:
+        probe = p.repartition(tasks)
     a, b = probe.alias("a"), p.alias("b")
     dist = F.levenshtein(F.col("a.p_name"), F.col("b.p_name"), 2)
     return (

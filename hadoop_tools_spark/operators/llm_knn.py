@@ -30,13 +30,8 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..io import load, local_rows_df, materialize
+from ..io import OUTER_PRODUCT, load, local_rows_df, materialize, width
 from ..io import table_bytes as io_table_bytes
-
-#: below this input size the round-robin spread before BLAS scoring
-#: costs more than the parallelism it buys (sf0.1 = 0.8 MB regressed
-#: 1.62x with the spread; sf1 = 5.9 MB needs it).
-_SPREAD_MIN_BYTES = 3 << 20
 from ..registry import query
 
 _K = 5
@@ -207,8 +202,7 @@ def llm_knn_exact(spark, sf_dir):
 
     # fixture parquet is a single file -> one input partition; spread
     # the corpus so the scoring stage uses every core
-    par = spark.sparkContext.defaultParallelism
-    partial = e.repartition(par).mapInPandas(block_knn, schema=schema)
+    partial = e.repartition(width(spark)).mapInPandas(block_knn, schema=schema)
     w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), "neighbor_id")
     return (
         partial.withColumn("rn", F.row_number().over(w).cast("long"))
@@ -316,12 +310,10 @@ def llm_knn_numpy(spark, sf_dir):
                 yield pd.concat(out, ignore_index=True)
 
     # single-row-group fixture -> one scan partition: spread so the
-    # BLAS scoring uses every core. Gated on input size: below
-    # _SPREAD_MIN_BYTES the exchange costs more than the parallel
-    # BLAS saves (measured 1.62x at sf0.1; required at sf1+).
-    par = spark.sparkContext.defaultParallelism
-    if io_table_bytes(sf_dir, "embeddings") >= _SPREAD_MIN_BYTES:
-        e = e.repartition(par)
+    # BLAS scoring uses every core once the input is big enough
+    tasks = width(spark, io_table_bytes(sf_dir, "embeddings"))
+    if tasks > 1:
+        e = e.repartition(tasks)
     partial = e.mapInPandas(block_knn, schema=_KNN_SCHEMA)
     w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), "neighbor_id")
     return (
@@ -538,9 +530,7 @@ def llm_embed_neardup(
     # one exchange — and the 16-block grid (136 groups, ~4 per task)
     # keeps per-task pair counts balanced; block-pair results are
     # independent of the grid, so the declared rows are unchanged.
-    rep = rep.repartition(
-        spark.sparkContext.defaultParallelism, "bi", "bj"
-    )
+    rep = rep.repartition(width(spark), "bi", "bj")
     pairs = rep.groupBy("bi", "bj").applyInPandas(
         score_block_pair, schema=out_schema
     )
@@ -894,8 +884,7 @@ def llm_knn_ivf(spark, sf_dir):
             if out:
                 yield pd.concat(out, ignore_index=True)
 
-    par = spark.sparkContext.defaultParallelism
-    partial = e.repartition(par).mapInPandas(probe_score, schema=schema)
+    partial = e.repartition(width(spark)).mapInPandas(probe_score, schema=schema)
     w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), "neighbor_id")
     return (
         partial.withColumn("rn", F.row_number().over(w).cast("long"))
@@ -1341,7 +1330,7 @@ def llm_kmeans(spark, sf_dir):
     # (r13: tried load_spread here — the exchange cost 1.25× at
     # sf0.1's 0.8 MB embeddings; the rounds' wall is driver-side
     # expression compile, not the single-partition scan. Same verdict
-    # as llm_knn_numpy's spread gate — don't re-try without
+    # as io.width's linear gate — don't re-try without
     # re-measuring.)
     e = materialize(
         load(spark, sf_dir, "embeddings").select(
@@ -1468,16 +1457,12 @@ def llm_embed_gram(spark, sf_dir):
     e = load(spark, sf_dir, "embeddings").select(
         F.col("embedding").cast("array<double>").alias("u")
     )
-    # spread the single-row-group fixture scan: the per-batch outer-
-    # product accumulation does dim²=4096 multiplies PER ROW (compute
-    # 64x the scanned bytes), and unspread it all lands in ONE
-    # mapInPandas task (profiled r13: a 1.2 s single-task stage).
-    # Partials are fixed-point integers, so the batch grid cannot
-    # change the summed result. Gate below the 3 MB linear-operator
-    # threshold because compute here is 64x bytes (the fuzzy-match
-    # quadratic-gate argument); tiny fixtures still skip the exchange.
-    if io_table_bytes(sf_dir, "embeddings") >= 256 << 10:
-        e = e.repartition(spark.sparkContext.defaultParallelism)
+    # spread the single-row-group fixture scan at the outer-product
+    # cost class. Partials are fixed-point integers, so the batch grid
+    # cannot change the summed result.
+    tasks = width(spark, io_table_bytes(sf_dir, "embeddings"), OUTER_PRODUCT)
+    if tasks > 1:
+        e = e.repartition(tasks)
 
     out_schema = T.StructType(
         [
@@ -1708,8 +1693,7 @@ def llm_embed_pq(spark, sf_dir):
             if out:
                 yield pd.concat(out, ignore_index=True)
 
-    par = spark.sparkContext.defaultParallelism
-    partial = e.repartition(par).mapInPandas(adc_score, schema=schema)
+    partial = e.repartition(width(spark)).mapInPandas(adc_score, schema=schema)
     w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), "neighbor_id")
     return (
         partial.withColumn("rn", F.row_number().over(w).cast("long"))
@@ -1852,8 +1836,7 @@ def llm_knn_ivfpq(spark, sf_dir):
             if out:
                 yield pd.concat(out, ignore_index=True)
 
-    par = spark.sparkContext.defaultParallelism
-    partial = e.repartition(par).mapInPandas(probe_adc, schema=schema)
+    partial = e.repartition(width(spark)).mapInPandas(probe_adc, schema=schema)
     w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), "neighbor_id")
     return (
         partial.withColumn("rn", F.row_number().over(w).cast("long"))

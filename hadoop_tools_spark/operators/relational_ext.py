@@ -40,7 +40,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..exact import sum_exact, sum_pinned, to_units
-from ..io import load, materialize
+from ..io import load, materialize, width
 from ..registry import query
 
 
@@ -994,10 +994,9 @@ def q21_waiting_supplier(spark, sf_dir):
     # (profiled: 1.3 s of the key's 2.3 s wall; task/wall said 0.3 s
     # of ideal compute). Same key as the join ⇒ still exactly one
     # exchange per side, and both group-bys ride it; at fact scale
-    # the exchange exists anyway and dp partitions ≈ the
-    # shuffle.partitions the session derives from the core count.
+    # the exchange exists anyway.
     li2 = li.select("l_orderkey", "l_suppkey", "l_shipdate").repartition(
-        spark.sparkContext.defaultParallelism, "l_orderkey"
+        width(spark), "l_orderkey"
     )
     pair = (
         li2.join(o2, li2.l_orderkey == o2.o_orderkey)

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..io import load, materialize
+from ..io import load, materialize, width
 from ..registry import query
 
 
@@ -52,7 +52,7 @@ def global_row_number(
     does by selecting 3 columns.
     """
     if n_parts is None:
-        n_parts = df.sparkSession.sparkContext.defaultParallelism
+        n_parts = width(df.sparkSession)
     ranged = materialize(
         df.repartitionByRange(n_parts, *order_cols)
         .sortWithinPartitions(*order_cols)

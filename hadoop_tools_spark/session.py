@@ -13,7 +13,9 @@ Defaults chosen for correctness-critical determinism and for scale:
   static plan to real data sizes;
 - shuffle partitions sized from the core count for local runs; a real
   cluster deployment would raise this to ~2-3× total cores and let AQE
-  coalesce.
+  coalesce. Every other task width (spreads, slice caps, fan-outs) is
+  decided by :func:`hadoop_tools_spark.io.width`, whose docstring holds
+  the measured thresholds.
 """
 
 from __future__ import annotations

@@ -515,3 +515,24 @@ def test_lpa_label_memo_shared_and_clearcache_safe(spark, sf_dir):
     labels3, _ = A._lpa_labels(spark, sf_dir)
     assert labels3 is labels1
     assert not cm.lookupCachedData(labels3._jdf).isEmpty()  # re-persisted
+
+
+def test_lpa_labels_rebuilt_after_layout_flip(spark, sf_dir, monkeypatch):
+    """_LPA_CACHE is keyed on the edge layout: once the layout flips
+    (the |V| bound fails a zero gate -> src), _lpa_labels must return a
+    fresh label vector built on the current _graph_base edges, never
+    the memo whose lineage points at the unpersisted dst edges."""
+    from hadoop_tools_spark.operators import analytics as A
+
+    labels1, _ = A._lpa_labels(spark, sf_dir)
+    monkeypatch.setattr(A, "_BC_GATE_ROWS", 0)
+    A._GRAPH_LAYOUT_CACHE.clear()
+    assert A._graph_layout(spark, sf_dir)[1] == "src"
+    labels2, edges2 = A._lpa_labels(spark, sf_dir)
+    assert labels2 is not labels1
+    assert edges2 is A._graph_base(spark, sf_dir)[0]
+    layout = re.findall(
+        r"hashpartitioning\((\w+)#\d+L?, \d+\), REPARTITION_BY_NUM",
+        plan_str(labels2),
+    )
+    assert layout and set(layout) == {"src"}, layout
