@@ -25,6 +25,13 @@ the log files actually opened — the pytest pins that a checkpointed
 read does NOT reopen older commits). Data reading is a plain
 distributed parquet scan over the live ``add`` paths.
 
+This module is the transaction-log codec over ``tablecore``, which
+owns the file-level half: staging writes and their footer stats (the
+``add`` actions' ``stats``), the min/max skip predicate, and the
+schema-pinned scan that attaches each file's logged partition values.
+What stays here is the log encoding, checkpoints, the protocol gate,
+time travel, ``txn`` idempotence, OPTIMIZE and VACUUM.
+
 Scale notes: log replay is driver-side file-list state — exactly what
 every Delta reader does (the log is KB per thousand files); checkpoints
 exist precisely so the replay cost is O(commits since checkpoint), not
@@ -43,7 +50,8 @@ from pyspark.sql import functions as F
 
 from ..io import load
 from ..registry import query
-from .snapshots import SCRATCH
+from . import tablecore
+from .snapshots import SCRATCH, totals
 
 _SCHEMA_STRING = json.dumps({
     "type": "struct",
@@ -262,44 +270,6 @@ class DeltaLogFixture:
         os.replace(tmp, last)
 
 
-def _footer_min_max(pf) -> tuple[dict, dict]:
-    """Per-column min/max aggregated across a parquet file's row
-    groups (footer-only — no data pages read). A column's bounds are
-    recorded ONLY when every row group contributed usable statistics:
-    partial bounds would be narrower than the file's actual data and
-    make skipping unsound (silently dropped rows), so any stats-less
-    or undecodable row group disqualifies the column entirely.
-    Byte-string stats decode to text (parquet stores UTF-8 min/max as
-    bytes)."""
-    mins: dict = {}
-    maxs: dict = {}
-    bad: set = set()
-    md = pf.metadata
-    for rg in range(md.num_row_groups):
-        for ci in range(md.num_columns):
-            col = md.row_group(rg).column(ci)
-            st = col.statistics
-            name = col.path_in_schema
-            if "." in name:
-                continue
-            if st is None or not st.has_min_max:
-                bad.add(name)
-                continue
-            mn, mx = st.min, st.max
-            if isinstance(mn, bytes):
-                try:
-                    mn, mx = mn.decode(), mx.decode()
-                except UnicodeDecodeError:
-                    bad.add(name)
-                    continue
-            mins[name] = mn if name not in mins else min(mins[name], mn)
-            maxs[name] = mx if name not in maxs else max(maxs[name], mx)
-    for name in bad:
-        mins.pop(name, None)
-        maxs.pop(name, None)
-    return mins, maxs
-
-
 class DeltaLogReader:
     """Replays a ``_delta_log`` to a version's live file set, starting
     from the newest checkpoint ≤ v when one exists.
@@ -490,7 +460,7 @@ class DeltaLogReader:
             n_all = len(state)
             state = {
                 p: a for p, a in state.items()
-                if self._bounds_may_match(a, range_filter)
+                if tablecore.may_match(*self._add_bounds(a), range_filter)
             }
             stats["files_skipped"] = (
                 stats.get("files_skipped", 0) + n_all - len(state))
@@ -499,29 +469,16 @@ class DeltaLogReader:
         return state
 
     @staticmethod
-    def _bounds_may_match(add: dict, range_filter: dict) -> bool:
-        """True unless the file's recorded min/max PROVE no row can
-        satisfy every (lo, hi) interval. Absent stats, absent columns
-        and uncomparable types all keep the file."""
+    def _add_bounds(add: dict) -> tuple[dict, dict]:
+        """(minValues, maxValues) from an add action's ``stats`` JSON;
+        absent or unparseable stats give empty bounds (keep the
+        file)."""
         raw = add.get("stats")
-        if not raw:
-            return True
         try:
-            st = json.loads(raw) if isinstance(raw, str) else raw
+            st = (json.loads(raw) if isinstance(raw, str) else raw) or {}
         except ValueError:
-            return True
-        mins = st.get("minValues") or {}
-        maxs = st.get("maxValues") or {}
-        for col, (lo, hi) in range_filter.items():
-            mn, mx = mins.get(col), maxs.get(col)
-            try:
-                if hi is not None and mn is not None and mn > hi:
-                    return False
-                if lo is not None and mx is not None and mx < lo:
-                    return False
-            except TypeError:
-                continue
-        return True
+            st = {}
+        return st.get("minValues") or {}, st.get("maxValues") or {}
 
     def _table_meta(self, version: int | None = None
                     ) -> tuple[list[dict], list[str]]:
@@ -580,44 +537,46 @@ class DeltaLogReader:
 
     def _read_adds(self, spark, state: dict,
                    version: int | None = None):
-        """Scan an {rel_path: add_action} set with partition-column
-        re-injection (shared by ``read`` and ``changes``). The scan
-        is pinned to the version's schema (``spark.read.schema``), so
+        """Scan an {rel_path: add_action} set (shared by ``read`` and
+        ``changes``) with reads pinned to the version's schema, so
         files written BEFORE an additive schema evolution NULL-fill
         the added columns — name-based resolution, exactly what a
         minReaderVersion-1 Delta table supports (renames/drops need
         the columnMapping reader feature, which the protocol gate
-        refuses)."""
+        refuses). Partitioned data files do NOT store the partition
+        columns (protocol): each file's logged ``partitionValues``
+        attach as per-file attributes, cast to their schema types —
+        Delta readers materialize partition values from the log, not
+        the footers. Columns follow schema order."""
         from pyspark.sql.types import StructType
 
         fields, pcols = self._table_meta(version)
-        st = StructType.fromJson({"type": "struct", "fields": fields})
         if not state:
-            return spark.createDataFrame([], st)
-        if not pcols:
-            paths = [os.path.join(self.path, p) for p in sorted(state)]
-            return spark.read.schema(st).parquet(*paths)
-        types = {f["name"]: f["type"] for f in fields}
+            return spark.createDataFrame(
+                [], StructType.fromJson({"type": "struct", "fields": fields})
+            )
         file_schema = StructType.fromJson({
             "type": "struct",
             "fields": [f for f in fields if f["name"] not in pcols],
         })
+        # one group per partition tuple, so each attaches as literals
+        parts: dict[str, tuple] = {}
         groups: dict[tuple, list[str]] = {}
         for rel, a in sorted(state.items()):
+            path = os.path.join(self.path, rel)
             pv = a.get("partitionValues") or {}
-            key = tuple(pv.get(c) for c in pcols)
-            groups.setdefault(key, []).append(
-                os.path.join(self.path, rel))
-        parts = []
-        for key, paths in groups.items():
-            df = spark.read.schema(file_schema).parquet(*paths)
-            for c, v in zip(pcols, key):
-                df = df.withColumn(c, F.lit(v).cast(types[c]))
-            parts.append(df.select(*[f["name"] for f in fields]))
-        out = parts[0]
-        for df in parts[1:]:
-            out = out.unionByName(df)
-        return out
+            parts[path] = tuple(pv.get(c) for c in pcols)
+            groups.setdefault(parts[path], []).append(path)
+        df = tablecore.scan(
+            spark,
+            [tablecore.Group(ps, file_schema) for ps in groups.values()],
+            [(c, "string") for c in pcols], parts,
+        )
+        return df.select(*[
+            F.col(f["name"]).cast(f["type"]).alias(f["name"])
+            if f["name"] in pcols else f["name"]
+            for f in fields
+        ])
 
     def changes(self, spark, from_version: int,
                 to_version: int | None = None):
@@ -692,10 +651,7 @@ def build_delta_fixture(spark, sf_dir: str, table_path: str) -> str:
     v1: add b (%3==0), REMOVE a1, then checkpoint;
     v2: add c (%50==0 re-inserted rows — duplicates, multiset
     semantics, same shape as the Iceberg fixture's C)."""
-    import glob as _glob
     import shutil
-
-    import pyarrow.parquet as pq
 
     shutil.rmtree(table_path, ignore_errors=True)
     os.makedirs(table_path, exist_ok=True)
@@ -705,16 +661,13 @@ def build_delta_fixture(spark, sf_dir: str, table_path: str) -> str:
 
     def write_slice(pred, tag) -> dict:
         d = os.path.join(table_path, f"_stage_{tag}")
-        (orders.filter(pred).coalesce(1)
-         .sortWithinPartitions("o_orderkey")
-         .write.mode("overwrite").parquet(d))
-        part = _glob.glob(os.path.join(d, "part-*.parquet"))[0]
+        (f,) = tablecore.stage(
+            orders.filter(pred).coalesce(1)
+            .sortWithinPartitions("o_orderkey"), d)
         rel = f"{tag}.parquet"
-        dst = os.path.join(table_path, rel)
-        os.replace(part, dst)
+        os.replace(f.path, os.path.join(table_path, rel))
         shutil.rmtree(d)
-        return {"path": rel, "size": os.path.getsize(dst),
-                "numRecords": pq.ParquetFile(dst).metadata.num_rows}
+        return {"path": rel, "size": f.size, "numRecords": f.rows}
 
     k = F.col("o_orderkey")
     a1 = write_slice((k % 3 != 0) & (k % 2 == 0), "a1")
@@ -763,16 +716,10 @@ def scan_delta_log(spark, sf_dir):
     )
     rd = DeltaLogReader(table)
 
-    def agg(df, v):
-        return df.agg(
-            F.count("*").alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-        ).select(F.lit(v).alias("version"), "n_orders", "revenue")
-
     return (
-        agg(rd.read(spark, 0), 0)
-        .unionAll(agg(rd.read(spark, 1), 1))
-        .unionAll(agg(rd.read(spark), 2))
+        totals(rd.read(spark, 0), version=0)
+        .unionAll(totals(rd.read(spark, 1), version=1))
+        .unionAll(totals(rd.read(spark), version=2))
     )
 
 
@@ -806,61 +753,25 @@ class DeltaTable(DeltaLogFixture):
         tbl.append(spark, df)
         return tbl
 
-    def _stage(self, spark, df) -> list[dict]:
-        import glob as _glob
-        import urllib.parse
-
-        import pyarrow.parquet as pq
-
-        sub = f"s{self.version + 1:04d}"
-        stage = os.path.join(self.path, sub)
-        writer = df.write.mode("overwrite")
+    def _add(self, f) -> dict:
+        """The writer-side ``add`` fields of one staged ``DataFile``."""
+        add = {
+            "path": os.path.relpath(f.path, self.path),
+            "size": f.size,
+            "numRecords": f.rows,
+            "minValues": f.mins,
+            "maxValues": f.maxs,
+        }
         if self.partition_cols:
-            # same fail-closed guard as the Iceberg writer (ADVICE
-            # r11): hive staging maps '' and NULL to the same
-            # directory, so '' would come back as a null partition
-            for c in self.partition_cols:
-                if dict(df.dtypes)[c] == "string" and (
-                        df.where(F.col(c) == "").take(1)):
-                    raise ValueError(
-                        f"empty-string partition value in column "
-                        f"{c!r}: hive-style staging cannot "
-                        "distinguish '' from NULL"
-                    )
-            writer = (df.repartition(*[F.col(c)
-                                       for c in self.partition_cols])
-                      .write.mode("overwrite")
-                      .partitionBy(*self.partition_cols))
-        writer.parquet(stage)
-        adds = []
-        for part in sorted(
-            _glob.glob(os.path.join(stage, "**", "part-*.parquet"),
-                       recursive=True)
-        ):
-            pf = pq.ParquetFile(part)
-            md = pf.metadata
-            rel = os.path.relpath(part, self.path)
-            mins, maxs = _footer_min_max(pf)
-            add = {
-                "path": rel,
-                "size": os.path.getsize(part),
-                "numRecords": md.num_rows,
-                "minValues": mins,
-                "maxValues": maxs,
+            add["partitionValues"] = {
+                c: f.partition.get(c) for c in self.partition_cols
             }
-            if self.partition_cols:
-                segs = dict(
-                    s.split("=", 1) for s in rel.split(os.sep)
-                    if "=" in s
-                )
-                add["partitionValues"] = {
-                    c: (None
-                        if segs[c] == "__HIVE_DEFAULT_PARTITION__"
-                        else urllib.parse.unquote(segs[c]))
-                    for c in self.partition_cols
-                }
-            adds.append(add)
-        return adds
+        return add
+
+    def _stage(self, spark, df) -> list[dict]:
+        stage = os.path.join(self.path, f"s{self.version + 1:04d}")
+        return [self._add(f)
+                for f in tablecore.stage(df, stage, self.partition_cols)]
 
     def append(self, spark, df) -> int:
         return self.commit(self._stage(spark, df), [])
@@ -960,10 +871,6 @@ class DeltaTable(DeltaLogFixture):
         already compact are left alone (at 100 TB only the small-file
         tail is rewritten, never the table). Returns the new version,
         or None when nothing needed compacting."""
-        import glob as _glob
-
-        import pyarrow.parquet as pq
-
         from pyspark.sql.types import StructType
 
         # Pin the CURRENT table schema on the compaction read (ADVICE
@@ -1002,20 +909,13 @@ class DeltaTable(DeltaLogFixture):
         # each single-file write's latency in sequence
         def compact_one(item):
             i, key, rels = item
-            stage = os.path.join(self.path, sub, f"g{i:04d}")
-            (spark.read.schema(file_schema).parquet(
-                *[os.path.join(self.path, r) for r in rels])
-             .coalesce(1).write.mode("overwrite").parquet(stage))
-            part = _glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-            pf = pq.ParquetFile(part)
-            mins, maxs = _footer_min_max(pf)
-            add = {
-                "path": os.path.relpath(part, self.path),
-                "size": os.path.getsize(part),
-                "numRecords": pf.metadata.num_rows,
-                "minValues": mins,
-                "maxValues": maxs,
-            }
+            (f,) = tablecore.stage(
+                spark.read.schema(file_schema).parquet(
+                    *[os.path.join(self.path, r) for r in rels]
+                ).coalesce(1),
+                os.path.join(self.path, sub, f"g{i:04d}"),
+            )
+            add = self._add(f)
             if self.partition_cols:
                 add["partitionValues"] = dict(
                     zip(self.partition_cols, key))
@@ -1108,16 +1008,10 @@ def sink_delta_append(spark, sf_dir):
     tbl.overwrite_with(spark, orders.filter(F.col("o_orderkey") % 7 == 0))
     rd = DeltaLogReader(path)
 
-    def agg(df, v):
-        return df.agg(
-            F.count("*").alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-        ).select(F.lit(v).alias("version"), "n_orders", "revenue")
-
     return (
-        agg(rd.read(spark, 0), 0)
-        .unionAll(agg(rd.read(spark, 1), 1))
-        .unionAll(agg(rd.read(spark), 2))
+        totals(rd.read(spark, 0), version=0)
+        .unionAll(totals(rd.read(spark, 1), version=1))
+        .unionAll(totals(rd.read(spark), version=2))
     )
 
 
@@ -1136,9 +1030,8 @@ def sink_delta_append(spark, sf_dir):
 )
 def sink_delta_partitioned(spark, sf_dir):
     """Partitioned Delta WRITE + READ round-trip: ``partitionBy`` a
-    derived status column ('P' → NULL so the null partition /
-    ``__HIVE_DEFAULT_PARTITION__`` path is exercised, not just
-    declared), then read back (a) the FULL table — partition values
+    derived status column ('P' → NULL so the null partition's hive
+    default directory is exercised, not just declared), then read back (a) the FULL table — partition values
     re-materialized from the log, since partitioned data files do not
     store the column — grouped per partition, and (b) a PRUNED read
     via ``part_filter`` that plans only the matching files. Both legs
@@ -1155,21 +1048,9 @@ def sink_delta_partitioned(spark, sf_dir):
     DeltaTable.create(spark, path, orders, overwrite=True,
                       partition_by=["status_part"])
     rd = DeltaLogReader(path)
-    full = (
-        rd.read(spark)
-        .groupBy("status_part")
-        .agg(F.count("*").alias("n_orders"),
-             F.round(F.sum("o_totalprice"), 2).alias("revenue"))
-        .select(F.lit("full").alias("scope"), "status_part",
-                "n_orders", "revenue")
-    )
-    pruned = (
-        rd.read(spark, part_filter={"status_part": "F"})
-        .agg(F.count("*").alias("n_orders"),
-             F.round(F.sum("o_totalprice"), 2).alias("revenue"))
-        .select(F.lit("pruned_F").alias("scope"),
-                F.lit("F").alias("status_part"), "n_orders", "revenue")
-    )
+    full = totals(rd.read(spark), by=["status_part"], scope="full")
+    pruned = totals(rd.read(spark, part_filter={"status_part": "F"}),
+                    scope="pruned_F", status_part="F")
     return full.unionAll(pruned)
 
 
@@ -1272,21 +1153,11 @@ def sink_delta_optimize(spark, sf_dir):
         "optimize must leave exactly one live file per partition"
     tbl.append(spark, orders.filter(k % 50 == 0))         # v4
     rd = DeltaLogReader(path)
-    full = (
-        rd.read(spark, v_opt)
-        .groupBy("o_orderstatus")
-        .agg(F.count("*").alias("n_rows"),
-             F.round(F.sum("o_totalprice"), 2).alias("revenue"))
-        .select(F.lit("post_optimize").alias("leg"), "o_orderstatus",
-                "n_rows", "revenue")
-    )
-    diff = (
-        rd.changes(spark, 1)  # (1, 4]: v2 append + OPTIMIZE + v4 append
-        .agg(F.count("*").alias("n_rows"),
-             F.round(F.sum("o_totalprice"), 2).alias("revenue"))
-        .select(F.lit("changes_skip_opt").alias("leg"),
-                F.lit("ALL").alias("o_orderstatus"), "n_rows", "revenue")
-    )
+    full = totals(rd.read(spark, v_opt), n="n_rows", by=["o_orderstatus"],
+                  leg="post_optimize")
+    # (1, 4]: v2 append + OPTIMIZE + v4 append
+    diff = totals(rd.changes(spark, 1), n="n_rows", leg="changes_skip_opt",
+                  o_orderstatus="ALL")
     return full.unionAll(diff)
 
 
@@ -1324,22 +1195,17 @@ def scan_delta_skipping(spark, sf_dir):
     )
     rd = DeltaLogReader(path)
 
-    def agg(df, leg):
-        return df.agg(
-            F.count("*").alias("n_rows"),
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-        ).select(F.lit(leg).alias("leg"), "n_rows", "revenue")
-
     k = F.col("o_orderkey")
     keyed = rd.read(spark, range_filter={"o_orderkey": (1000, 5000)})
     assert rd.last_plan_stats["files_skipped"] >= 1, \
         "range-clustered key window must skip at least one file"
-    leg1 = agg(keyed.where(k.between(1000, 5000)), "key_range")
+    leg1 = totals(keyed.where(k.between(1000, 5000)), n="n_rows",
+                  leg="key_range")
     p = F.col("o_totalprice")
     priced = rd.read(
         spark, range_filter={"o_totalprice": (100000.0, 200000.0)})
-    leg2 = agg(priced.where(p.between(100000.0, 200000.0)),
-               "price_range")
+    leg2 = totals(priced.where(p.between(100000.0, 200000.0)),
+                  n="n_rows", leg="price_range")
     return leg1.unionAll(leg2)
 
 
@@ -1374,10 +1240,7 @@ def sink_delta_vacuum(spark, sf_dir):
         "vacuum must delete the tombstoned versions' data files"
     assert not any(p in tbl.live for p in deleted), \
         "vacuum must never touch the retained live set"
-    return DeltaLogReader(path).read(spark).agg(
-        F.count("*").alias("n_rows"),
-        F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-    )
+    return totals(DeltaLogReader(path).read(spark), n="n_rows")
 
 
 @query(
@@ -1470,10 +1333,7 @@ def sink_delta_txn(spark, sf_dir):
     assert retry is None and len(tbl.log_versions()) == n_commits, \
         "a replayed txn version must commit nothing"
     tbl.append_txn(spark, orders.filter(k % 50 == 0), "loader", 2)
-    return DeltaLogReader(path).read(spark).agg(
-        F.count("*").alias("n_rows"),
-        F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-    )
+    return totals(DeltaLogReader(path).read(spark), n="n_rows")
 
 
 def version_as_of(reader: DeltaLogReader, ts_ms: int) -> int:

@@ -19,19 +19,22 @@ metadata is KB-scale by design), and ``IcebergReader`` plans + reads it:
 - sequence-number inheritance (ADDED entries with null seq inherit the
   manifest-list entry's sequence number, spec §"Sequence Number
   Inheritance"),
-- position deletes applied to data files with ``data_seq <= delete_seq``
-  via an anti-join on ``(_metadata.file_path, _metadata.row_index)``,
-- equality deletes applied to data files with ``data_seq < delete_seq``
-  (strictly less — rows added in the same snapshot as the delete
-  survive) via a null-safe anti-join on the ``equality_ids`` columns.
+- position deletes (applied to data files with ``data_seq <=
+  delete_seq``) and equality deletes (``data_seq < delete_seq``,
+  null-safe on the ``equality_ids`` columns resolved by field id).
+
+This module is the Avro-manifest codec over ``tablecore``, which owns
+the file-level half: staging writes and their footer stats, the
+min/max skip predicate, the schema-pinned scan with per-file sequence
+numbers, and the delete anti-joins (broadcast when the manifests'
+``file_size_in_bytes`` says the delete files fit). What stays here is
+the metadata tree, partition transforms, bound encoding, field-id
+projection and snapshot maintenance.
 
 Scale notes: planning walks metadata only (the driver reads manifests,
 exactly what an Iceberg coordinator does; manifest-list partition
 summaries prune whole manifests before any manifest byte is read). The
-data path is a plain distributed parquet scan; delete application
-broadcasts the delete rows when the manifests' ``file_size_in_bytes``
-says they fit (< ``_BC_DELETE_BYTES``), else falls back to a shuffled
-anti-join — the same two regimes a real Iceberg Spark reader has.
+data path is a plain distributed parquet scan.
 
 The nested-record Avro codec here is schema-driven and recursive (the
 flat codec in ``avro.py`` stays the graded scan key's); both follow the
@@ -47,13 +50,17 @@ import re
 import struct
 import uuid
 import zlib
+from functools import reduce
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..io import load, local_rows_df
 from ..registry import query
+from . import tablecore
 from .avro import MAGIC, SYNC, _dec_long, _enc_long
-from .snapshots import SCRATCH
+from .snapshots import SCRATCH, totals
+from .tablecore import DEL_PATH, DEL_POS, DEL_SEQ, PATH, POS, SEQ
 
 # ---------------------------------------------------------------------------
 # generic (recursive) Avro datum codec — records / arrays / [null, T] unions
@@ -426,36 +433,25 @@ def _norm_path(p: str) -> str:
     return re.sub(r"^file:/+", "/", p)
 
 
-def _bounds_exclude(data_file: dict, rf: dict) -> bool:
-    """True only when the data file's recorded bounds PROVE no row can
-    satisfy every (lo, hi) interval in ``rf`` ({field_id: (type, lo,
-    hi)}). Absent bounds, absent columns and undecodable values all
-    keep the file — skipping must be provably safe, never guessed."""
-    lob = data_file.get("lower_bounds")
-    upb = data_file.get("upper_bounds")
-    if not lob or not upb:
-        return False
-    lo_map = {p["key"]: p["value"] for p in lob}
-    hi_map = {p["key"]: p["value"] for p in upb}
-    for fid, (t, lo, hi) in rf.items():
-        bl, bh = lo_map.get(fid), hi_map.get(fid)
-        if bl is None or bh is None:
-            continue
-        try:
-            mn = _part_value_from_bytes(bl, t)
-            mx = _part_value_from_bytes(bh, t)
-            if hi is not None and mn > hi:
-                return True
-            if lo is not None and mx < lo:
-                return True
-        except (ValueError, TypeError, struct.error):
-            continue
-    return False
+def _file_bounds(data_file: dict, types: dict) -> tuple[dict, dict]:
+    """Decode a data file's field-id keyed bounds for the fields in
+    ``types`` ({field_id: type}) into (mins, maxs) for
+    ``tablecore.may_match``; a missing or undecodable bound is left
+    out, so it cannot exclude the file."""
+    out: tuple[dict, dict] = ({}, {})
+    for side, key in zip(out, ("lower_bounds", "upper_bounds")):
+        for p in data_file.get(key) or ():
+            try:
+                if p["key"] in types:
+                    side[p["key"]] = _part_value_from_bytes(
+                        p["value"], types[p["key"]])
+            except (ValueError, struct.error):
+                pass
+    return out
 
 
 _STATUS_ADDED, _STATUS_EXISTING, _STATUS_DELETED = 1, 0, 2
 _CONTENT_DATA, _CONTENT_POS_DELETES, _CONTENT_EQ_DELETES = 0, 1, 2
-_BC_DELETE_BYTES = 64 << 20
 
 
 # ---------------------------------------------------------------------------
@@ -1054,7 +1050,7 @@ class IcebergReader:
         caller still applies the exact predicate). Delete files are
         never skipped (a skipped delete would resurrect rows).
         """
-        rf = None
+        rf_types = rf = None
         if range_filter:
             target = {f["name"]: f
                       for f in self._target_fields(snapshot_id)}
@@ -1064,7 +1060,7 @@ class IcebergReader:
                     f"unknown data-skipping column(s) {unknown}; "
                     f"schema columns: {sorted(target)}"
                 )
-            rf = {}
+            rf, rf_types = {}, {}
             for c, (lo, hi) in range_filter.items():
                 t = target[c]["type"]
                 if t not in ("int", "long", "double", "float",
@@ -1073,7 +1069,8 @@ class IcebergReader:
                         f"range_filter on {c!r}: type {t!r} has no "
                         "single-value bound serialization here"
                     )
-                rf[target[c]["id"]] = (t, lo, hi)
+                rf[target[c]["id"]] = (lo, hi)
+                rf_types[target[c]["id"]] = t
         if part_filter:
             known = {
                 f["name"]
@@ -1170,7 +1167,8 @@ class IcebergReader:
                 kind = {_CONTENT_DATA: "data",
                         _CONTENT_POS_DELETES: "pos_deletes",
                         _CONTENT_EQ_DELETES: "eq_deletes"}[df["content"]]
-                if rf and kind == "data" and _bounds_exclude(df, rf):
+                if rf and kind == "data" and not tablecore.may_match(
+                        *_file_bounds(df, rf_types), rf):
                     stats["files_skipped_bounds"] += 1
                     continue
                 out[kind].append(rec)
@@ -1186,12 +1184,12 @@ class IcebergReader:
 
     @staticmethod
     def _project_by_field_id(df, file_fields, target_fields):
-        """Resolve parquet columns to the target schema by FIELD ID
-        (r12, VERDICT #1): a renamed column is found under its
-        write-time name, a column added after the file was written
-        NULL-fills, a dropped column is simply not selected. Falls
-        back to name resolution when the manifest carried no schema
-        (legacy/foreign trees). Keeps the reader's _ice_* columns."""
+        """Resolve parquet columns to the target schema by FIELD ID:
+        a renamed column is found under its write-time name, a column
+        added after the file was written NULL-fills, a dropped column
+        is simply not selected. Falls back to name resolution when the
+        manifest carried no schema (legacy/foreign trees). Keeps the
+        scan's file path and row index columns."""
         by_id = (
             {f["id"]: f["name"] for f in file_fields}
             if file_fields is not None else None
@@ -1207,79 +1205,58 @@ class IcebergReader:
                     F.lit(None).cast(_ICE_TO_SPARK[f["type"]])
                     .alias(f["name"])
                 )
-        keep = [c for c in ("_ice_path", "_ice_pos") if c in have]
+        keep = [c for c in (PATH, POS) if c in have]
         return df.select(*cols, *keep)
 
-    #: max file count for the literal-map sequence attach; past this
-    #: the broadcast-join form bounds expression-tree size
-    _SEQ_LITERAL_MAX = 1024
-
     @staticmethod
-    def _attach_seq(spark, df, path_col: str, seq_col: str, pairs):
-        """Attach a per-file sequence number column by path: a literal
-        CreateMap lookup for bounded file counts (zero driver frames,
-        zero joins), the r13 broadcast-join otherwise."""
-        if len(pairs) <= IcebergReader._SEQ_LITERAL_MAX:
-            mapping = F.create_map(
-                *[lit for p, s in pairs for lit in (F.lit(p), F.lit(s))]
+    def _file_ddl(file_schema) -> str | None:
+        """Scan pin from a manifest-embedded write schema, so no group
+        pays footer inference; None (infer) when the schema is absent
+        or holds a type this reader does not map. Name/type resolution
+        is unchanged: projection already assumes the manifest schema's
+        names, and a physical column missing from a (foreign) file
+        null-fills either way."""
+        try:
+            return ", ".join(
+                f"`{f['name']}` {_ICE_TO_SPARK[f['type']]}"
+                for f in file_schema
             )
-            return df.withColumn(
-                seq_col, F.element_at(mapping, F.col(path_col))
-            )
-        seq_map = local_rows_df(
-            spark, list(pairs), f"{path_col} string, {seq_col} long"
-        )
-        return df.join(F.broadcast(seq_map), path_col)
+        except (KeyError, TypeError):
+            return None
 
-    def _read_data_entries(self, spark, entries, target_fields):
-        """Scan data files grouped by their write-time schema, project
-        each group to the target schema by field id, union. The
-        common single-schema case is one group — the same plan as a
-        direct scan plus a rename-only projection."""
+    def _scan(self, spark, entries, target_fields, with_seq=False,
+              with_pos=False):
+        """Scan data files grouped by their write-time schema, each
+        group projected to the target schema by field id; ``with_seq``
+        attaches each file's data sequence number. The common
+        single-schema case is one group — the same plan as a direct
+        scan plus a rename-only projection."""
         groups: dict[bytes, list[dict]] = {}
         for d in entries:
             groups.setdefault(d["schema_key"], []).append(d)
-        parts = []
+        scan_groups = []
         for _, ds in sorted(groups.items()):
-            # pin the group's manifest-embedded schema on the scan:
-            # without it every group pays a driver-side footer
-            # schema-inference pass per read (measured ~0.15 s each —
-            # 8 reads × groups added seconds to the multispec key).
-            # Name/type resolution is unchanged: projection already
-            # assumes the manifest schema's names, and a physical
-            # column missing from a (foreign) file null-fills either
-            # way. Unknown/complex types fall back to inference.
-            reader = spark.read
-            try:
-                ddl = ", ".join(
-                    f"`{f['name']}` {_ICE_TO_SPARK[f['type']]}"
-                    for f in ds[0]["file_schema"]
-                )
-                reader = reader.schema(ddl)
-            except (KeyError, TypeError):
-                pass  # no/complex file schema: infer as before
-            g = reader.parquet(*[d["path"] for d in ds])
-            g = g.withColumn(
-                "_ice_path",
-                self._norm_path_col(F.col("_metadata.file_path")),
-            ).withColumn("_ice_pos", F.col("_metadata.row_index"))
-            parts.append(
-                self._project_by_field_id(g, ds[0]["file_schema"],
-                                          target_fields)
-            )
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        return df
+            fs = ds[0]["file_schema"]
+            scan_groups.append(tablecore.Group(
+                [d["path"] for d in ds], self._file_ddl(fs),
+                project=lambda df, fs=fs: self._project_by_field_id(
+                    df, fs, target_fields),
+            ))
+        return tablecore.scan(
+            spark, scan_groups,
+            [(SEQ, "long")] if with_seq else (),
+            {d["path"]: (d["seq"],) for d in entries} if with_seq else None,
+            with_pos=with_pos,
+        )
 
-    @staticmethod
-    def _norm_path_col(c):
-        """`_metadata.file_path` is a percent-encoded URI while plan
-        paths are raw os paths (review find: a table dir with a space
-        made every join miss silently). Decode %XX JVM-side; literal
-        '+' is pre-escaped because url_decode is form-decoding."""
-        c = F.regexp_replace(c, r"\+", "%2B")
-        return F.url_decode(F.regexp_replace(c, "^file:/+", "/"))
+    def _read_deletes(self, spark, files, file_schema=None):
+        return tablecore.read_deletes(
+            spark,
+            [tablecore.Group([f["path"] for f in files],
+                             self._file_ddl(file_schema))],
+            {f["path"]: f["seq"] for f in files},
+            sum(f["file_size"] for f in files),
+        )
 
     def read(self, spark, snapshot_id: int | None = None,
              part_filter: dict | None = None,
@@ -1288,66 +1265,22 @@ class IcebergReader:
         target = self._target_fields(snapshot_id)
         if not plan["data"]:
             return self._empty(spark, target)
-        df = self._read_data_entries(spark, plan["data"], target)
         data_cols = [f["name"] for f in target]
-        # per-file data sequence numbers: attached as a literal-map
-        # lookup on the scan's _metadata path — a pure expression, so
-        # the read builds NO driver-local DataFrame and plans NO
-        # broadcast join for it (r14: the seq-map createDataFrame +
-        # broadcast was ~0.3 s of driver wall PER READ). Tables past
-        # _SEQ_LITERAL_MAX files keep the r13 broadcast-join shape —
-        # a 100 TB manifest must not become a million-node expression.
-        df = self._attach_seq(
-            spark, df, "_ice_path", "_ice_seq",
-            [(d["path"], d["seq"]) for d in plan["data"]],
-        )
-
-        def deletes_df(files, file_schema=None):
-            reader = spark.read
-            # pin the manifest-recorded delete-file schema when the
-            # caller KNOWS it describes the file (eq deletes, whose
-            # schema the join below already resolves by field id) —
-            # same footer-inference skip the data scan got in r13.
-            # pos-delete entries record the TABLE schema, not the
-            # (file_path, pos) file schema, so they keep inference.
-            if file_schema is not None:
-                try:
-                    ddl = ", ".join(
-                        f"`{f['name']}` {_ICE_TO_SPARK[f['type']]}"
-                        for f in file_schema
-                    )
-                    reader = reader.schema(ddl)
-                except (KeyError, TypeError):
-                    pass  # no/complex file schema: infer as before
-            d = reader.parquet(*[f["path"] for f in files])
-            d = d.withColumn(
-                "_del_file",
-                self._norm_path_col(F.col("_metadata.file_path")),
-            )
-            d = self._attach_seq(
-                spark, d, "_del_file", "_del_seq",
-                [(f["path"], f["seq"]) for f in files],
-            ).drop("_del_file")
-            if sum(f["file_size"] for f in files) < _BC_DELETE_BYTES:
-                d = F.broadcast(d)
-            return d
-
+        has_deletes = bool(plan["pos_deletes"] or plan["eq_deletes"])
+        df = self._scan(spark, plan["data"], target, with_seq=has_deletes,
+                        with_pos=bool(plan["pos_deletes"]))
+        pos = None
         if plan["pos_deletes"]:
             # pos-delete file_path VALUES are writer-side URIs (not
             # Spark-scan metadata), so only the scheme prefix needs
-            # stripping — writers store the path verbatim
-            pos = deletes_df(plan["pos_deletes"]).select(
+            # stripping — writers store the path verbatim. Their
+            # entries record the TABLE schema, not the (file_path, pos)
+            # file schema, so they keep footer inference.
+            pos = self._read_deletes(spark, plan["pos_deletes"]).select(
                 F.regexp_replace("file_path", "^file:/+", "/")
-                .alias("_tgt_path"),
-                F.col("pos").alias("_tgt_pos"),
-                "_del_seq",
-            )
-            df = df.join(
-                pos,
-                (df["_ice_path"] == pos["_tgt_path"])
-                & (df["_ice_pos"] == pos["_tgt_pos"])
-                & (df["_ice_seq"] <= pos["_del_seq"]),  # pos: applies to <=
-                "left_anti",
+                .alias(DEL_PATH),
+                F.col("pos").alias(DEL_POS),
+                DEL_SEQ,
             )
         # group equality-delete files by (equality_ids, write schema) —
         # both the TARGET column and the DELETE-FILE column resolve by
@@ -1359,6 +1292,7 @@ class IcebergReader:
             if not ids:
                 raise ValueError("equality delete file without equality_ids")
             eq_groups.setdefault((ids, f["schema_key"]), []).append(f)
+        eq = []
         for (ids, _), files in sorted(eq_groups.items()):
             missing = [i for i in ids if i not in target_by_id]
             if missing:
@@ -1368,21 +1302,20 @@ class IcebergReader:
                     f"equality delete references dropped field id(s) "
                     f"{missing}; read an older snapshot instead"
                 )
-            cols = [target_by_id[i] for i in ids]
             src_by_id = (
                 {f["id"]: f["name"] for f in files[0]["file_schema"]}
                 if files[0]["file_schema"] is not None else target_by_id
             )
-            eqd = deletes_df(files, files[0]["file_schema"]).select(
-                *[F.col(src_by_id[i]).alias(f"_eq_{target_by_id[i]}")
+            names = {target_by_id[i]: f"_eq_{target_by_id[i]}" for i in ids}
+            eqd = self._read_deletes(
+                spark, files, files[0]["file_schema"]
+            ).select(
+                *[F.col(src_by_id[i]).alias(names[target_by_id[i]])
                   for i in ids],
-                "_del_seq",
+                DEL_SEQ,
             )
-            cond = df["_ice_seq"] < eqd["_del_seq"]  # eq: strictly less
-            for c in cols:  # null-safe: an eq-delete of NULL deletes NULLs
-                cond = cond & df[c].eqNullSafe(eqd[f"_eq_{c}"])
-            df = df.join(eqd, cond, "left_anti")
-        return df.select(*data_cols)
+            eq.append((eqd, names))
+        return tablecore.merge_deletes(df, pos, eq).select(*data_cols)
 
     def changes(self, spark, from_snapshot_id: int,
                 to_snapshot_id: int | None = None):
@@ -1424,7 +1357,7 @@ class IcebergReader:
         if not added:
             return self._empty(spark, target)
         names = [f["name"] for f in target]
-        return self._read_data_entries(spark, added, target).select(*names)
+        return self._scan(spark, added, target).select(*names)
 
 
 # ---------------------------------------------------------------------------
@@ -1437,15 +1370,10 @@ def _write_sorted_parquet(df, directory: str) -> tuple[str, int, int]:
     makes position deletes SQL-expressible); returns (abspath, rows,
     bytes) with the counts taken from the parquet footer, not a second
     Spark job."""
-    import glob as _glob
-
-    import pyarrow.parquet as pq
-
-    (df.coalesce(1).sortWithinPartitions("o_orderkey")
-       .write.mode("overwrite").parquet(directory))
-    part = _glob.glob(os.path.join(directory, "part-*.parquet"))[0]
-    md = pq.ParquetFile(part).metadata
-    return part, md.num_rows, os.path.getsize(part)
+    f = tablecore.stage(
+        df.coalesce(1).sortWithinPartitions("o_orderkey"), directory
+    )[0]
+    return f.path, f.rows, f.size
 
 
 def _write_driver_parquet(directory: str, name: str, table) -> tuple[str, int, int]:
@@ -1622,20 +1550,10 @@ def scan_iceberg_table(spark, sf_dir):
     )
     rd = IcebergReader(table)
 
-    def agg(df, v):
-        return df.agg(
-            F.count("*").alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-        ).select(F.lit(v).alias("version"), "n_orders", "revenue")
-
-    parts = [
-        agg(rd.read(spark, snapshot_id=s["snapshot-id"]), i + 1)
+    return reduce(DataFrame.unionAll, [
+        totals(rd.read(spark, snapshot_id=s["snapshot-id"]), version=i + 1)
         for i, s in enumerate(rd.metadata["snapshots"])
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
-    return out
+    ])
 
 
 @query(
@@ -1677,12 +1595,6 @@ def scan_iceberg_pruned(spark, sf_dir):
     rd = IcebergReader(table)
     snaps = rd.metadata["snapshots"]
 
-    def agg(df, v):
-        return df.agg(
-            F.count("*").alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-        ).select(F.lit(v).alias("snapshot_seq"), "n_orders", "revenue")
-
     odd = rd.read(
         spark, snapshot_id=snaps[1]["snapshot-id"],
         part_filter={"part_bucket": 1},
@@ -1690,7 +1602,7 @@ def scan_iceberg_pruned(spark, sf_dir):
     if rd.last_plan_stats["manifests_pruned"] < 2:
         raise AssertionError("manifest-list pruning did not engage")
     even = rd.read(spark, part_filter={"part_bucket": 0})
-    return agg(odd, 2).unionAll(agg(even, 3))
+    return totals(odd, snapshot_seq=2).unionAll(totals(even, snapshot_seq=3))
 
 
 # ---------------------------------------------------------------------------
@@ -1765,35 +1677,14 @@ class IcebergTable(IcebergFixture):
         tbl.append(spark, df)
         return tbl
 
-    @staticmethod
-    def _reject_empty_string_parts(df, pcol, col_name: str) -> None:
-        """Hive partitionBy writes an EMPTY-STRING partition value into
-        ``__HIVE_DEFAULT_PARTITION__`` — the same directory as NULL —
-        so the manifest would record it as a null partition value and
-        ``part_filter={col: ''}`` would silently miss those rows
-        (ADVICE r11). Fail closed before writing anything: one
-        early-exit ``take(1)`` probe on the partition expression (the
-        predicate pushes to the scan; cost is bounded by the first
-        match, and only string-typed partition specs pay it)."""
-        if df.where(pcol == "").take(1):
-            raise ValueError(
-                f"empty-string partition value in column {col_name!r}: "
-                "hive-style staging cannot distinguish '' from NULL "
-                "(__HIVE_DEFAULT_PARTITION__); filter or transform the "
-                "column before partitioning on it"
-            )
-
-    def _transform_expr(self, df, pf: dict):
+    def _transform_expr(self, pf: dict):
         """The Spark column computing one partition field's value.
         bucket[N] uses the vectorized murmur3 kernel; truncate floors
         toward -inf for longs / takes the first W codepoints for
         strings (spec transform table); identity passes through."""
         t, src = pf["transform"], pf["src"]["name"]
         if t == "identity":
-            pcol = F.col(src)
-            if self._field_value_type(pf) == "string":
-                self._reject_empty_string_parts(df, pcol, src)
-            return pcol
+            return F.col(src)
         if t.startswith("bucket"):
             # derived partition value: murmur3 bucket ordinal — the
             # column is NOT part of the table schema (spec: transform
@@ -1802,44 +1693,37 @@ class IcebergTable(IcebergFixture):
         if t.startswith("truncate"):
             w = int(t[t.index("[") + 1:-1])
             if pf["src"]["type"] == "string":
-                pcol = F.substring(F.col(src), 1, w)
-                self._reject_empty_string_parts(df, pcol, src)
-                return pcol
+                return F.substring(F.col(src), 1, w)
             # floor-to-multiple incl. negatives (spec: truncate
             # rounds toward -inf) — pure JVM column math, pmod
             # keeps the remainder non-negative
             return F.col(src) - F.pmod(F.col(src), F.lit(w))
         raise ValueError(f"unsupported transform {t!r}")
 
-    def _column_bounds(self, pf) -> tuple[list | None, list | None]:
-        """Per-column lower/upper bounds for one staged parquet file,
-        keyed by FIELD ID (spec manifest fields 125/128), serialized
-        per appendix D. Bounds come from the parquet footers via the
-        same all-or-nothing aggregation the Delta writer uses — a
-        column with any stats-less row group is omitted entirely,
-        since partial bounds would make skipping unsound. Unsupported
-        types are skipped (absent bounds = the reader keeps the
-        file)."""
-        from .deltalog import _footer_min_max
-
-        mins, maxs = _footer_min_max(pf)
-        by_name = {f["name"]: f for f in self.schema_fields}
+    def _column_bounds(self, f) -> tuple[list | None, list | None]:
+        """Per-column lower/upper bounds of one staged ``DataFile``,
+        keyed by FIELD ID (spec manifest fields 125/128) and
+        serialized per appendix D. The footer min/max come from
+        ``tablecore`` (all-or-nothing per column, so bounds are
+        sound); unsupported types are skipped (absent bounds = the
+        reader keeps the file)."""
+        by_name = {fld["name"]: fld for fld in self.schema_fields}
         lob, upb = [], []
-        for name, mn in mins.items():
+        for name, mn in f.mins.items():
             fld = by_name.get(name)
             if fld is None or fld["type"] not in (
                     "int", "long", "double", "float", "string"):
                 continue
             try:
                 lo = _part_value_bytes(mn, fld["type"])
-                hi = _part_value_bytes(maxs[name], fld["type"])
+                hi = _part_value_bytes(f.maxs[name], fld["type"])
             except (ValueError, struct.error):
                 continue
             lob.append({"key": fld["id"], "value": lo})
             upb.append({"key": fld["id"], "value": hi})
         return (lob or None), (upb or None)
 
-    def _stage_data_files(self, spark, df) -> list[dict]:
+    def _stage(self, spark, df) -> list[dict]:
         """Distributed parquet write → manifest entries with
         footer-read stats. Partitioned tables use a hive-style
         ``partitionBy`` layout over the derived ``_pI`` columns (the
@@ -1848,54 +1732,36 @@ class IcebergTable(IcebergFixture):
         the directories in field order."""
         import glob as _glob
 
-        import pyarrow.parquet as pq
-
         n = sum(1 for _ in _glob.glob(os.path.join(self.path, "data", "s*")))
         stage = os.path.join(self.path, "data", f"s{n:04d}-{self.seq + 1}")
-        if self.part_fields:
-            pnames = [f"_p{i}" for i in range(len(self.part_fields))]
-            staged = df
-            for name, pf in zip(pnames, self.part_fields):
-                staged = staged.withColumn(
-                    name, self._transform_expr(df, pf))
-            writer = (
-                staged.repartition(*[F.col(p) for p in pnames])
-                .write.mode("overwrite").partitionBy(*pnames)
-            )
-        else:
-            writer = df.write.mode("overwrite")
-        writer.parquet(stage)
+        pnames = [f"_p{i}" for i in range(len(self.part_fields))]
+        staged = df.withColumns({
+            name: self._transform_expr(pf)
+            for name, pf in zip(pnames, self.part_fields)
+        })
         entries = []
-        for part in sorted(
-            _glob.glob(os.path.join(stage, "**", "part-*.parquet"),
-                       recursive=True)
+        for f in tablecore.stage(
+            staged, stage, pnames,
+            labels={n: pf["src"]["name"]
+                    for n, pf in zip(pnames, self.part_fields)},
         ):
-            md = pq.ParquetFile(part).metadata
             part_val = None
             if self.part_fields:
-                segs = dict(
-                    s.split("=", 1) for s in part.split(os.sep)
-                    if s.startswith("_p") and "=" in s
-                )
-                part_val = {}
-                for i, pf in enumerate(self.part_fields):
-                    raw = segs[f"_p{i}"]
-                    if raw == "__HIVE_DEFAULT_PARTITION__":
-                        v = None
-                    elif self._field_value_type(pf) == "string":
-                        # hive dir values are URL-escaped for reserved
-                        # chars; truncate prefixes here are plain, but
-                        # unquote keeps hostile values correct
-                        import urllib.parse
-
-                        v = urllib.parse.unquote(raw)
-                    else:
-                        v = int(raw)
-                    part_val[pf["name"]] = v
-            lob, upb = self._column_bounds(pq.ParquetFile(part))
+                # hive dir values arrive unescaped; non-string
+                # transform results are ints
+                part_val = {
+                    pf["name"]: (
+                        v if v is None
+                        or self._field_value_type(pf) == "string"
+                        else int(v)
+                    )
+                    for pf, v in zip(self.part_fields,
+                                     (f.partition[n] for n in pnames))
+                }
+            lob, upb = self._column_bounds(f)
             entries.append({"data_file": {
-                "path": part, "record_count": md.num_rows,
-                "file_size": os.path.getsize(part),
+                "path": f.path, "record_count": f.rows,
+                "file_size": f.size,
                 "partition_value": part_val,
                 "lower_bounds": lob, "upper_bounds": upb,
             }})
@@ -1913,7 +1779,7 @@ class IcebergTable(IcebergFixture):
                 f"append columns {sorted(got)} != current schema "
                 f"{sorted(want)}"
             )
-        entries = self._stage_data_files(spark, df)
+        entries = self._stage(spark, df)
         return self.commit(
             [(entries, _CONTENT_DATA, self.current_spec_id)])
 
@@ -1922,19 +1788,15 @@ class IcebergTable(IcebergFixture):
         columns name the equality columns; one delete file covers the
         whole batch (unpartitioned spec — the global-delete shape).
         Applies to STRICTLY older data files per the spec."""
-        import glob as _glob
-
-        import pyarrow.parquet as pq
-
         name_to_id = {f["name"]: f["id"] for f in self.schema_fields}
         eq_ids = [name_to_id[c] for c in delete_rows.columns]
-        stage = os.path.join(self.path, "data", f"eqdel-{self.seq + 1}")
-        delete_rows.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = _glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        md = pq.ParquetFile(part).metadata
+        f = tablecore.stage(
+            delete_rows.coalesce(1),
+            os.path.join(self.path, "data", f"eqdel-{self.seq + 1}"),
+        )[0]
         entry = {"data_file": {
-            "path": part, "record_count": md.num_rows,
-            "file_size": os.path.getsize(part),
+            "path": f.path, "record_count": f.rows,
+            "file_size": f.size,
             "content": _CONTENT_EQ_DELETES, "equality_ids": eq_ids,
         }}
         spec_unpart = self.empty_spec_id
@@ -1998,16 +1860,10 @@ def sink_iceberg_append(spark, sf_dir):
     rd = IcebergReader(path)
     snaps = [s["snapshot-id"] for s in rd.metadata["snapshots"]]
 
-    def agg(df, v):
-        return df.agg(
-            F.count("*").alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-        ).select(F.lit(v).alias("version"), "n_orders", "revenue")
-
     return (
-        agg(rd.read(spark, snapshot_id=snaps[0]), 1)
-        .unionAll(agg(rd.read(spark, snapshot_id=snaps[1]), 2))
-        .unionAll(agg(rd.read(spark), 3))
+        totals(rd.read(spark, snapshot_id=snaps[0]), version=1)
+        .unionAll(totals(rd.read(spark, snapshot_id=snaps[1]), version=2))
+        .unionAll(totals(rd.read(spark), version=3))
     )
 
 
@@ -2264,16 +2120,10 @@ def scan_iceberg_changes(spark, sf_dir):
     rd = IcebergReader(path)
     s = [x["snapshot-id"] for x in rd.metadata["snapshots"]]
 
-    def agg(df, w):
-        return df.agg(
-            F.count("*").alias("n_rows"),
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-        ).select(F.lit(w).alias("window"), "n_rows", "revenue")
-
     return (
-        agg(rd.changes(spark, s[0], s[1]), 12)
-        .unionAll(agg(rd.changes(spark, s[1], s[2]), 23))
-        .unionAll(agg(rd.changes(spark, s[0]), 13))
+        totals(rd.changes(spark, s[0], s[1]), n="n_rows", window=12)
+        .unionAll(totals(rd.changes(spark, s[1], s[2]), n="n_rows", window=23))
+        .unionAll(totals(rd.changes(spark, s[0]), n="n_rows", window=13))
     )
 
 
@@ -2316,27 +2166,22 @@ def sink_iceberg_multispec(spark, sf_dir):
     )
     tbl.append(spark, orders.filter(m > 6))
     rd = IcebergReader(path)
+    return _month_via_buckets(spark, rd, 3).unionAll(
+        _month_via_buckets(spark, rd, 8))
 
-    def month_via_buckets(month):
-        parts = []
-        for b in range(4):
-            df = rd.read(spark, part_filter={
-                "o_month": month, "o_orderkey_bucket": b,
-            })
-            if rd.last_plan_stats["manifests_pruned"] < 1:
-                raise AssertionError(
-                    "month-range manifest pruning did not engage"
-                )
-            parts.append(df)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionAll(p)
-        return out.agg(
-            F.count("*").alias("n_rows"),
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-        ).select(F.lit(month).alias("sel_month"), "n_rows", "revenue")
 
-    return month_via_buckets(3).unionAll(month_via_buckets(8))
+def _month_via_buckets(spark, rd, month):
+    """One month's totals as the union of its four (month, bucket)
+    reads, each of which must prune a manifest from its LIST row."""
+    parts = []
+    for b in range(4):
+        parts.append(rd.read(spark, part_filter={
+            "o_month": month, "o_orderkey_bucket": b,
+        }))
+        if rd.last_plan_stats["manifests_pruned"] < 1:
+            raise AssertionError("month-range manifest pruning did not engage")
+    return totals(reduce(DataFrame.unionAll, parts), n="n_rows",
+                  sel_month=month)
 
 
 @query(
@@ -2386,10 +2231,7 @@ def sink_iceberg_expire(spark, sf_dir):
         pass
     else:
         raise AssertionError("expired snapshot must not be plannable")
-    return rd.read(spark).agg(
-        F.count("*").alias("n_rows"),
-        F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-    )
+    return totals(rd.read(spark), n="n_rows")
 
 
 @query(
@@ -2425,22 +2267,17 @@ def scan_iceberg_skipping(spark, sf_dir):
     )
     rd = IcebergReader(path)
 
-    def agg(df, leg):
-        return df.agg(
-            F.count("*").alias("n_rows"),
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-        ).select(F.lit(leg).alias("leg"), "n_rows", "revenue")
-
     k = F.col("o_orderkey")
     keyed = rd.read(spark, range_filter={"o_orderkey": (1000, 5000)})
     assert rd.last_plan_stats["files_skipped_bounds"] >= 1, \
         "range-clustered key window must skip at least one file"
-    leg1 = agg(keyed.where(k.between(1000, 5000)), "key_range")
+    leg1 = totals(keyed.where(k.between(1000, 5000)), n="n_rows",
+                  leg="key_range")
     p = F.col("o_totalprice")
     priced = rd.read(
         spark, range_filter={"o_totalprice": (100000.0, 200000.0)})
-    leg2 = agg(priced.where(p.between(100000.0, 200000.0)),
-               "price_range")
+    leg2 = totals(priced.where(p.between(100000.0, 200000.0)),
+                  n="n_rows", leg="price_range")
     return leg1.unionAll(leg2)
 
 
@@ -2492,26 +2329,11 @@ def sink_iceberg_spec_evolution(spark, sf_dir):
     assert fids == {"o_month": 1000, "o_orderkey_bucket": 1001}, \
         "evolved spec must reuse the month field-id"
 
-    def agg(df, month):
-        return df.agg(
-            F.count("*").alias("n_rows"),
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-        ).select(F.lit(month).alias("sel_month"), "n_rows", "revenue")
-
     # month 3: old-spec data; the new-spec manifest prunes on its
     # month summary from the LIST row alone
     df3 = rd.read(spark, part_filter={"o_month": 3})
     assert rd.last_plan_stats["manifests_pruned"] >= 1
-    leg3 = agg(df3, 3)
+    leg3 = totals(df3, n="n_rows", sel_month=3)
 
     # month 8: new-spec data via its 4 buckets (disjoint + complete)
-    parts = []
-    for b in range(4):
-        df = rd.read(spark, part_filter={"o_month": 8,
-                                         "o_orderkey_bucket": b})
-        assert rd.last_plan_stats["manifests_pruned"] >= 1
-        parts.append(df)
-    u = parts[0]
-    for p in parts[1:]:
-        u = u.unionAll(p)
-    return leg3.unionAll(agg(u, 8))
+    return leg3.unionAll(_month_via_buckets(spark, rd, 8))

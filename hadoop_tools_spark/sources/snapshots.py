@@ -24,6 +24,14 @@ The `snapshot_timetravel` key commits two versions of a deterministic
 orders subset and reads BOTH snapshots back; the oracle recomputes
 each version's aggregate straight from the orders table, proving the
 snapshot isolation semantics, not just the plumbing.
+
+This module is the JSON-manifest codec over ``tablecore``, which owns
+the file-level half: staging writes and their footer stats, min/max
+skipping, the pinned multi-path scan with per-file sequence numbers,
+and the merge-on-read delete anti-joins. What stays here is the
+manifest encoding, the CAS commit chain, refs, blooms, and the schema
+source of each commit group (the ``_schema.json`` sidecar and the
+instance schema cache).
 """
 
 from __future__ import annotations
@@ -36,8 +44,33 @@ from pyspark.sql import functions as F
 
 from ..io import load
 from ..registry import query
+from . import tablecore
+from .tablecore import DEL_PATH, DEL_POS, DEL_SEQ, PATH, POS, SEQ
 
 SCRATCH = os.environ.get("HTS_SCRATCH", "/tmp/hts_scratch")
+
+
+def _fresh_table(name: str, **kw) -> "SnapshotTable":
+    """An empty snapshot table under ``SCRATCH``: a key replays its
+    table's whole history, so a prior run's manifests must not be
+    inherited."""
+    import shutil
+
+    path = os.path.join(SCRATCH, name)
+    shutil.rmtree(path, ignore_errors=True)
+    return SnapshotTable(path, **kw)
+
+
+def totals(df: DataFrame, n: str = "n_orders", by=(), **labels
+           ) -> DataFrame:
+    """The lakehouse keys' aggregate, one row per ``by`` group: the
+    literal ``labels`` columns in order, the ``by`` columns, then the
+    row count ``n`` and the rounded ``o_totalprice`` sum ``revenue``."""
+    return df.groupBy(*by).agg(
+        F.count("*").alias(n),
+        F.round(F.sum("o_totalprice"), 2).alias("revenue"),
+    ).select(*[F.lit(v).alias(k) for k, v in labels.items()], *by, n,
+             "revenue")
 
 
 class CommitConflict(Exception):
@@ -262,46 +295,43 @@ class SnapshotTable:
         return self.read(spark, version=self.ref_version(name), **kw)
 
     # -- commits -----------------------------------------------------
-    def _stage(
+    def _stage_stats(
         self,
         df: DataFrame,
         commit_id: str,
         partition_by: list[str] | None = None,
-    ) -> list[str]:
+    ) -> dict[str, dict]:
         """Write data files for one commit into their own subdir;
-        returns table-relative file names (recursive — partitioned
-        commits nest ``col=value`` directories). Files are immutable
-        once written — the manifest publish is the only mutation
-        point."""
-        sub = f"data-{commit_id}"
-        if partition_by:
-            # spread the write across partition values: a single-input-
-            # partition frame otherwise writes EVERY col=value dir from
-            # one task (profiled r13: 1.6 s single-task job for an
-            # 80-partition commit). Hash-repartitioning on the
-            # partition columns gives each task its own value set and
-            # keeps one file per partition value.
-            df = df.repartition(*[F.col(c) for c in partition_by])
-            writer = df.write.mode("overwrite").partitionBy(*partition_by)
-        else:
-            writer = df.write.mode("overwrite")
-        writer.parquet(os.path.join(self.path, sub))
-        root = os.path.join(self.path, sub)
-        names = []
-        for dirpath, _dirs, files in os.walk(root):
-            rel = os.path.relpath(dirpath, self.path)
-            names.extend(
-                os.path.join(rel, f) for f in files if f.endswith(".parquet")
-            )
+        returns {table-relative file name: manifest stats} in name
+        order (partitioned commits nest ``col=value`` directories).
+        Files are immutable once written — the manifest publish is the
+        only mutation point. The stats are the footers' per-column
+        min/max, kept only for JSON-stable scalars (int/float/str), so
+        pruning is always conservative."""
+        root = os.path.join(self.path, f"data-{commit_id}")
+        files = tablecore.stage(df, root, partition_by or ())
         self._write_schema_sidecar(df, root, partition_by)
-        return sorted(names)
+        return {
+            os.path.relpath(f.path, self.path): {
+                c: [mn, f.maxs[c]]
+                for c, mn in f.mins.items()
+                if isinstance(mn, (int, float, str))
+                and not isinstance(mn, bool)
+            }
+            for f in files
+        }
+
+    def _stage(self, df: DataFrame, commit_id: str,
+               partition_by: list[str] | None = None) -> list[str]:
+        """Table-relative names of one commit's staged files."""
+        return list(self._stage_stats(df, commit_id, partition_by))
 
     @staticmethod
     def _write_schema_sidecar(df, root: str, partition_by) -> None:
         """Record the commit group's READ-BACK schema next to its data
         files so the FIRST read of the group skips the driver-side
-        footer inference pass too (r14; the r13 instance cache only
-        covered re-reads). Derivation is free — a parquet read-back of
+        footer inference pass too (the instance cache only covers
+        re-reads). Derivation is free — a parquet read-back of
         a single Spark write is exactly the written schema with every
         field nullable (verified empirically) — but only provably so
         for unpartitioned, flat-typed groups: partitionBy moves
@@ -362,45 +392,6 @@ class SnapshotTable:
         finally:
             os.unlink(tmp)
         return version
-
-    def _collect_stats(self, rel_files: list[str]) -> dict:
-        """Per-file column min/max for the manifest (Iceberg's other
-        half: stats collected at COMMIT time from the parquet footers
-        the writer just produced — no data scan). Only JSON-stable
-        scalar types (int/float/str) are kept; a column missing stats
-        in any row group is dropped for that file, so pruning is
-        always conservative."""
-        import pyarrow.parquet as pq
-
-        out: dict[str, dict] = {}
-        for rel in rel_files:
-            meta = pq.ParquetFile(os.path.join(self.path, rel)).metadata
-            st: dict[str, list] = {}
-            if meta.num_row_groups == 0:
-                out[rel] = st
-                continue
-            g0 = meta.row_group(0)
-            for i in range(g0.num_columns):
-                name = g0.column(i).path_in_schema
-                lo = hi = None
-                ok = True
-                for rg in range(meta.num_row_groups):
-                    s = meta.row_group(rg).column(i).statistics
-                    if s is None or not s.has_min_max:
-                        ok = False
-                        break
-                    mn, mx = s.min, s.max
-                    if isinstance(mn, bool) or not isinstance(
-                        mn, (int, float, str)
-                    ):
-                        ok = False
-                        break
-                    lo = mn if lo is None else min(lo, mn)
-                    hi = mx if hi is None else max(hi, mx)
-                if ok and lo is not None:
-                    st[name] = [lo, hi]
-            out[rel] = st
-        return out
 
     # bloom parameters: ~10 bits/value, 4 hashes ≈ 1–2 % false
     # positives — the Iceberg/Parquet default neighborhood
@@ -550,9 +541,10 @@ class SnapshotTable:
         # creators must never share (and mode('overwrite')-clobber)
         # one directory — the CAS publish picks the v0 winner, but
         # only if each candidate's staged files survive intact
-        files = self._stage(df, f"00000-{os.getpid()}")
+        stats = self._stage_stats(df, f"00000-{os.getpid()}")
+        files = list(stats)
         extra = {
-            "stats": self._collect_stats(files),
+            "stats": stats,
             "group_seq": {g: 0 for g in self._groups_of(files)},
         }
         if self.bloom_cols:
@@ -568,8 +560,8 @@ class SnapshotTable:
         restaging is needed on retry."""
         v = self.latest_version()
         commit_id = f"{v + 1:05d}-{os.getpid()}"
-        staged = self._stage(df, commit_id, partition_by=partition_by)
-        staged_stats = self._collect_stats(staged)
+        staged_stats = self._stage_stats(df, commit_id, partition_by)
+        staged = list(staged_stats)
         staged_blooms = (
             self._collect_blooms(staged) if self.bloom_cols else {}
         )
@@ -703,10 +695,10 @@ class SnapshotTable:
         """Position-delete commit (Iceberg v2's second delete flavor):
         ``pos`` is a (file, pos) DataFrame — TABLE-RELATIVE data file
         path + 0-based row ordinal within that file. Readers drop the
-        named ordinals via an anti-join against the scan's
-        ``_metadata.file_path``/``row_index`` columns. Unlike equality
-        deletes no sequence comparison is needed: a position delete
-        names one immutable file, which can never gain rows, so it can
+        named ordinals via an anti-join against the scan's decoded
+        file path and row index. The core's data seq <= delete seq rule
+        always holds here: a position delete names one immutable file,
+        committed before it, which can never gain rows, so it can
         never over-apply to later data. The natural producer is a
         query that found bad rows in place (file + ordinal from the
         same ``_metadata`` columns) — erasure without knowing a key.
@@ -766,8 +758,8 @@ class SnapshotTable:
             )
         v = self.latest_version()
         commit_id = f"{v + 1:05d}-{os.getpid()}"
-        staged = self._stage(df, commit_id)
-        staged_stats = self._collect_stats(staged)
+        staged_stats = self._stage_stats(df, commit_id)
+        staged = list(staged_stats)
         del_staged = self._stage(
             df.select(*key_cols).distinct(), commit_id + "-eqdel"
         )
@@ -833,8 +825,8 @@ class SnapshotTable:
         v = self.latest_version()
         commit_id = f"{v + 1:05d}-{os.getpid()}-cdc"
         upserts = changes.filter(F.col(op_col) == "U").drop(op_col)
-        staged = self._stage(upserts, commit_id)
-        staged_stats = self._collect_stats(staged)
+        staged_stats = self._stage_stats(upserts, commit_id)
+        staged = list(staged_stats)
         del_staged = self._stage(
             changes.select(*key_cols).distinct(), commit_id + "-eqdel"
         )
@@ -873,61 +865,41 @@ class SnapshotTable:
     def _apply_deletes(
         self, spark: SparkSession, df: DataFrame, deletes: list[dict]
     ) -> DataFrame:
-        """Reader-side merge: anti-join ``df`` (carrying ``__seq``)
-        against each delete-column-set's unioned delete files. The join
-        is an equi anti-join on the key columns with the sequence
-        comparison as a residual predicate — shuffles hash on the keys,
-        and small delete sets broadcast under AQE, so the merge costs
-        one pass over the data regardless of history depth."""
-        from functools import reduce
+        """Reader-side merge (``tablecore.merge_deletes``): one
+        anti-join for the position deletes, one per equality-delete
+        column set. NULL key tuples match nothing here (SQL equality),
+        so their rows leave the delete frame before the core's
+        null-safe match."""
+
+        def read(entries):
+            paths = [os.path.join(self.path, d["file"]) for d in entries]
+            return tablecore.read_deletes(
+                spark, self._groups(spark, paths),
+                {p: d["seq"] for p, d in zip(paths, entries)},
+                sum(os.path.getsize(p) for p in paths),
+            )
 
         pos_entries = [d for d in deletes if d.get("kind") == "pos"]
+        pos = None
         if pos_entries:
-            # ONE multi-path read with the delete files' KNOWN schema:
-            # a per-file `spark.read.parquet` loop costs a driver-side
-            # relation build (file listing + footer schema inference)
-            # PER FILE — measured ~0.13 s each, 4+ s for a 32-file
-            # delete commit — where one schema-pinned call costs none
-            dd = spark.read.schema("file string, pos long").parquet(
-                *[os.path.join(self.path, d["file"]) for d in pos_entries]
-            ).select(
-                F.col("file").alias("__d_file"),
-                F.col("pos").alias("__d_pos"),
+            root = os.path.abspath(self.path) + os.sep
+            pos = read(pos_entries).select(
+                F.concat(F.lit(root), F.col("file")).alias(DEL_PATH),
+                F.col("pos").alias(DEL_POS),
+                DEL_SEQ,
             )
-            df = df.join(
-                dd,
-                (df["__file"] == dd["__d_file"])
-                & (df["__pos"] == dd["__d_pos"]),
-                "left_anti",
-            )
-
         by_cols: dict[tuple, list[dict]] = {}
         for d in deletes:
-            if d.get("kind") == "pos":
-                continue
-            by_cols.setdefault(tuple(d["cols"]), []).append(d)
+            if d.get("kind") != "pos":
+                by_cols.setdefault(tuple(d["cols"]), []).append(d)
+        eq = []
         for cols, group in sorted(by_cols.items()):
-            # same batching for equality deletes: one read per DELETE
-            # COMMIT (a commit's files share one sequence number), not
-            # one per file
-            by_seq: dict[int, list[str]] = {}
-            for d in group:
-                by_seq.setdefault(d["seq"], []).append(
-                    os.path.join(self.path, d["file"])
-                )
-            dd = None
-            for seq, paths in sorted(by_seq.items()):
-                part = spark.read.parquet(*paths).select(
-                    *[F.col(c).alias(f"__d_{c}") for c in cols],
-                    F.lit(seq).alias("__dseq"),
-                )
-                dd = part if dd is None else dd.unionAll(part)
-            cond = reduce(
-                lambda a, b: a & b,
-                [df[c] == dd[f"__d_{c}"] for c in cols],
-            ) & (dd["__dseq"] > df["__seq"])
-            df = df.join(dd, cond, "left_anti")
-        return df
+            names = {c: f"__d_{c}" for c in cols}
+            dd = read(group).select(
+                *[F.col(c).alias(n) for c, n in names.items()], DEL_SEQ
+            ).dropna(subset=list(names.values()))
+            eq.append((dd, names))
+        return tablecore.merge_deletes(df, pos, eq)
 
     # -- reads -------------------------------------------------------
     def read(
@@ -946,24 +918,14 @@ class SnapshotTable:
         homogeneous DataFrame per group, where it is a no-op) — at
         the cost of a footer-read per file at planning.
 
-        When the manifest carries equality-delete files, the read is a
-        MERGE-ON-READ: each commit group is tagged with its sequence
-        number and anti-joined against deletes of strictly greater
-        sequence (``_apply_deletes``) — time travel to a pre-delete
-        version never sees the delete, post-delete appends are never
-        affected by it."""
+        When the manifest carries delete files, the read is a
+        MERGE-ON-READ: each data file is tagged with its commit
+        group's sequence number and anti-joined against the deletes
+        (``_apply_deletes``) — time travel to a pre-delete version
+        never sees the delete, post-delete appends are never affected
+        by it."""
         v = self.latest_version() if version is None else version
-        man = self._manifest(v)
-        deletes = man.get("deletes", [])
-        if not deletes:
-            return self._read_files(spark, self.files(v), merge_schema)
-        has_pos = any(d.get("kind") == "pos" for d in deletes)
-        df = self._read_files(
-            spark, self.files(v), merge_schema, with_seq=True,
-            with_pos=has_pos, group_seq=man.get("group_seq", {}),
-        )
-        out = self._apply_deletes(spark, df, deletes).drop("__seq")
-        return out.drop("__file", "__pos") if has_pos else out
+        return self._pruned_read(spark, v, None, merge_schema)
 
     def pruned_files(
         self,
@@ -971,27 +933,22 @@ class SnapshotTable:
         version: int | None = None,
     ) -> list[str]:
         """Scan-planning file pruning from the manifest stats: keep a
-        file unless some interval constraint PROVABLY excludes it —
-        for ``{col: (lo, hi)}`` (either bound may be None) a file is
-        skipped iff its recorded [min, max] misses [lo, hi] entirely.
-        Files or columns without stats are always kept, so pruning can
-        never change query results, only the file list length."""
+        file unless ``tablecore.may_match`` proves its recorded
+        [min, max] misses an interval of ``{col: (lo, hi)}`` (either
+        bound may be None). Files or columns without stats are always
+        kept, so pruning can never change query results, only the
+        file list length."""
         v = self.latest_version() if version is None else version
         man = self._manifest(v)
         stats = man.get("stats", {})
         keep = []
         for rel in man["files"]:
             st = stats.get(rel) or {}
-            drop = False
-            for col, (lo, hi) in intervals.items():
-                if col in st:
-                    fmn, fmx = st[col]
-                    if (hi is not None and fmn > hi) or (
-                        lo is not None and fmx < lo
-                    ):
-                        drop = True
-                        break
-            if not drop:
+            if tablecore.may_match(
+                {c: b[0] for c, b in st.items()},
+                {c: b[1] for c, b in st.items()},
+                intervals,
+            ):
                 keep.append(os.path.join(self.path, rel))
         return keep
 
@@ -1042,32 +999,75 @@ class SnapshotTable:
         return self._pruned_read(spark, v, files, merge_schema)
 
     def _pruned_read(self, spark, v, files, merge_schema):
-        """Shared tail of the pruned reads: schema from the FULL file
-        list (zero-row union), data from the surviving files, pending
-        deletes merged on top."""
+        """Shared tail of every read: ``files`` None reads all of
+        version ``v``; a pruned list is read under the schema of the
+        FULL file list (zero-row union). Pending deletes are merged on
+        top."""
         man = self._manifest(v)
+        every = self.files(v)
         deletes = man.get("deletes", [])
-        with_seq = bool(deletes)
-        has_pos = any(d.get("kind") == "pos" for d in deletes)
-        gseq = man.get("group_seq", {})
-        schema_frame = self._read_files(
-            spark, self.files(v), merge_schema, with_seq=with_seq,
-            with_pos=has_pos, group_seq=gseq,
-        ).limit(0)
-        if not files:
-            out = schema_frame
-        else:
-            out = schema_frame.unionByName(
-                self._read_files(
-                    spark, files, merge_schema, with_seq=with_seq,
-                    with_pos=has_pos, group_seq=gseq,
-                ),
-                allowMissingColumns=True,
-            )
+        seqs = None
         if deletes:
-            out = self._apply_deletes(spark, out, deletes).drop("__seq")
-            if has_pos:
-                out = out.drop("__file", "__pos")
+            # commit sequences are manifest-recorded (authoritative —
+            # they survive CAS-retry version drift); the dir-name
+            # fallback covers manifests older than group_seq
+            gseq = man.get("group_seq", {})
+            seqs = {}
+            for f in every:
+                g = os.path.relpath(f, self.path).split(os.sep, 1)[0]
+                seqs[f] = gseq.get(g, self._seq_of(g))
+        with_pos = any(d.get("kind") == "pos" for d in deletes)
+
+        def rd(fs):
+            return self._read_files(spark, fs, merge_schema, seqs, with_pos)
+
+        out = rd(every)
+        if files is not None:
+            out = out.limit(0)
+            if files:
+                out = out.unionByName(rd(files), allowMissingColumns=True)
+        if deletes:
+            out = self._apply_deletes(spark, out, deletes).drop(
+                PATH, POS, SEQ
+            )
+        return out
+
+    def _groups(self, spark: SparkSession, files: list[str],
+                merge_schema: bool = False) -> list:
+        """One scan group per commit subdir with that dir as basePath:
+        each commit owns its partition layout (a flat multi-path read
+        fails on CONFLICTING_DIRECTORY_STRUCTURES once one commit is
+        partitioned and another is not). The schema pin comes from the
+        instance cache (keyed on the exact file set and mergeSchema
+        mode), else the commit's ``_schema.json`` sidecar, valid for
+        any subset of the one write that produced the group; else
+        footer inference. Every pin is cached, so a re-read skips
+        inference."""
+        from pyspark.sql.types import StructType
+
+        by_dir: dict[str, list[str]] = {}
+        for f in files:  # absolute paths; group by commit subdir
+            rel = os.path.relpath(f, self.path)
+            by_dir.setdefault(rel.split(os.sep, 1)[0], []).append(f)
+        out = []
+        for commit_dir in sorted(by_dir):
+            opts = {"basePath": os.path.join(self.path, commit_dir)}
+            if merge_schema:
+                opts["mergeSchema"] = "true"
+            paths = by_dir[commit_dir]
+            key = (commit_dir, merge_schema, frozenset(paths))
+            schema = self._group_schema_cache.get(key)
+            if schema is None:
+                try:
+                    with open(os.path.join(
+                            self.path, commit_dir, "_schema.json")) as fh:
+                        schema = StructType.fromJson(json.load(fh))
+                except Exception:
+                    pass
+            if schema is None:
+                schema = spark.read.options(**opts).parquet(*paths).schema
+            self._group_schema_cache[key] = schema
+            out.append(tablecore.Group(paths, schema, opts))
         return out
 
     def _read_files(
@@ -1075,81 +1075,18 @@ class SnapshotTable:
         spark: SparkSession,
         files: list[str],
         merge_schema: bool = False,
-        with_seq: bool = False,
+        seqs: dict | None = None,
         with_pos: bool = False,
-        group_seq: dict | None = None,
     ) -> DataFrame:
-        # Partition-spec evolution (Iceberg-style): each commit owns its
-        # layout, so files are read PER COMMIT GROUP with that commit's
-        # dir as basePath (recovering its col=value partition columns,
-        # if any), then unioned by name — a flat multi-path read would
-        # fail on CONFLICTING_DIRECTORY_STRUCTURES the moment one
-        # commit is partitioned and another is not.
-        groups: dict[str, list[str]] = {}
-        for f in files:  # absolute paths; group by commit subdir
-            rel = os.path.relpath(f, self.path)
-            groups.setdefault(rel.split(os.sep, 1)[0], []).append(f)
-        parts = []
-        for commit_dir in sorted(groups):
-            reader = spark.read.option(
-                "basePath", os.path.join(self.path, commit_dir)
-            )
-            if merge_schema:
-                reader = reader.option("mergeSchema", "true")
-            # Re-reads of an identical immutable group skip footer
-            # schema inference (~0.1 s of driver wall per relation
-            # build); the cache key pins the exact file set so a
-            # pruned subset or a different mergeSchema mode never
-            # reuses a mismatched schema.
-            ck = (commit_dir, merge_schema, frozenset(groups[commit_dir]))
-            cached = self._group_schema_cache.get(ck)
-            if cached is None:
-                # commit-recorded sidecar (r14): one write produced the
-                # whole group, so its recorded schema is valid for any
-                # file subset and either mergeSchema mode — the first
-                # read skips footer inference like every re-read does
-                try:
-                    with open(
-                        os.path.join(self.path, commit_dir, "_schema.json")
-                    ) as fh:
-                        from pyspark.sql.types import StructType
-
-                        cached = StructType.fromJson(json.load(fh))
-                    self._group_schema_cache[ck] = cached
-                except Exception:
-                    cached = None
-            if cached is not None:
-                reader = reader.schema(cached)
-            part = reader.parquet(*groups[commit_dir])
-            if cached is None:
-                self._group_schema_cache[ck] = part.schema
-            if with_pos:
-                # table-relative file path + within-file row ordinal
-                # from the scan's _metadata columns (position-delete
-                # application); must be projected BEFORE the union —
-                # _metadata is only resolvable on the scan relation
-                part = part.select(
-                    "*",
-                    F.expr(
-                        "substring(regexp_replace("
-                        "_metadata.file_path, '^file:', ''), "
-                        f"{len(self.path) + 2})"
-                    ).alias("__file"),
-                    F.col("_metadata.row_index").alias("__pos"),
-                )
-            if with_seq:
-                # commit sequence for merge-on-read delete application:
-                # manifest-recorded (authoritative — survives CAS-retry
-                # version drift), dir-name fallback for old manifests
-                seq = (group_seq or {}).get(
-                    commit_dir, self._seq_of(commit_dir)
-                )
-                part = part.withColumn("__seq", F.lit(seq))
-            parts.append(part)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p, allowMissingColumns=True)
-        return out
+        """Scan ``files`` by commit group; ``seqs`` ({path: commit
+        sequence}) attaches ``SEQ``, ``with_pos`` the path and row
+        index."""
+        return tablecore.scan(
+            spark, self._groups(spark, files, merge_schema),
+            [(SEQ, "long")] if seqs else (),
+            {f: (seqs[f],) for f in files} if seqs else None,
+            with_pos=with_pos,
+        )
 
 
 @query(
@@ -1173,24 +1110,12 @@ def snapshot_timetravel(spark, sf_dir):
     recomputation of the original subset.
     """
     orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    table_path = os.path.join(SCRATCH, "snapshot_orders")
-    # the key replays the table's whole history, so start from an empty
-    # table dir (a prior run's manifests would otherwise be inherited)
-    import shutil
-
-    shutil.rmtree(table_path, ignore_errors=True)
-    tbl = SnapshotTable(table_path)
+    tbl = _fresh_table("snapshot_orders")
     tbl.create(orders.filter(F.col("o_orderkey") % 3 != 0))
     tbl.append(orders.filter(F.col("o_orderkey") % 3 == 0))
 
-    def agg(df, v):
-        return df.agg(
-            F.count("*").alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-        ).select(F.lit(v).alias("version"), "n_orders", "revenue")
-
-    return agg(tbl.read(spark, version=0), 0).unionAll(
-        agg(tbl.read(spark, version=1), 1)
+    return totals(tbl.read(spark, version=0), version=0).unionAll(
+        totals(tbl.read(spark, version=1), version=1)
     )
 
 
@@ -1229,13 +1154,14 @@ def compact(tbl: SnapshotTable, spark: SparkSession,
         ).sortWithinPartitions(*cluster_by)
     else:
         packed = df.repartition(target_files)
-    files = tbl._stage(packed, commit_id)
+    stats = tbl._stage_stats(packed, commit_id)
+    files = list(stats)
     # `read` above already merged pending equality deletes, so the
     # rewritten files materialize them: the new manifest carries NO
     # `deletes` list — compaction is how merge-on-read debt retires
     extra = {
         "compaction_of": v,
-        "stats": tbl._collect_stats(files),
+        "stats": stats,
         "group_seq": {
             g: v + 1 for g in SnapshotTable._groups_of(files)
         },
@@ -1350,11 +1276,7 @@ def snapshot_schema_evolution(spark, sf_dir):
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderpriority"
     )
-    table_path = os.path.join(SCRATCH, "snapshot_evolve")
-    import shutil
-
-    shutil.rmtree(table_path, ignore_errors=True)
-    tbl = SnapshotTable(table_path)
+    tbl = _fresh_table("snapshot_evolve")
     tbl.create(
         orders.filter(F.col("o_orderkey") % 3 != 0).drop("o_orderpriority")
     )
@@ -1414,11 +1336,7 @@ def snapshot_partition_evolution(spark, sf_dir):
         "o_totalprice",
         F.date_format("o_orderdate", "yyyy-MM").alias("o_month"),
     )
-    table_path = os.path.join(SCRATCH, "snapshot_partevolve")
-    import shutil
-
-    shutil.rmtree(table_path, ignore_errors=True)
-    tbl = SnapshotTable(table_path)
+    tbl = _fresh_table("snapshot_partevolve")
     # epoch 1: unpartitioned (odd keys)
     tbl.create(orders.filter(F.col("o_orderkey") % 2 == 1))
     # epoch 2: the pipeline adopts month partitioning (even keys)
@@ -1426,14 +1344,7 @@ def snapshot_partition_evolution(spark, sf_dir):
         orders.filter(F.col("o_orderkey") % 2 == 0), partition_by=["o_month"]
     )
     cur = tbl.read(spark)
-    return (
-        cur.filter(F.col("o_month") == "1996-03")
-        .groupBy("o_month")
-        .agg(
-            F.count("*").alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-        )
-    )
+    return totals(cur.filter(F.col("o_month") == "1996-03"), by=["o_month"])
 
 
 def table_changes(tbl: SnapshotTable, spark: SparkSession,
@@ -1501,11 +1412,7 @@ def snapshot_changes(spark, sf_dir):
             F.col("o_orderstatus")
         ),
     )
-    table_path = os.path.join(SCRATCH, "snapshot_changes")
-    import shutil
-
-    shutil.rmtree(table_path, ignore_errors=True)
-    tbl = SnapshotTable(table_path)
+    tbl = _fresh_table("snapshot_changes")
     tbl.create(v0_df)
     tbl.overwrite(v1_df)
     old, new = tbl.read(spark, version=0), tbl.read(spark, version=1)
@@ -1551,15 +1458,11 @@ def snapshot_skipping(spark, sf_dir):
     every object. The quartile bounds derive from one 1-row aggregate
     (bounded collect).
     """
-    import shutil
-
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
     )
     m = orders.agg(F.max("o_custkey")).collect()[0][0]
-    table_path = os.path.join(SCRATCH, "snapshot_skip_orders")
-    shutil.rmtree(table_path, ignore_errors=True)
-    tbl = SnapshotTable(table_path)
+    tbl = _fresh_table("snapshot_skip_orders")
     q = [0, m // 4, m // 2, (3 * m) // 4, m + 1]
     tbl.create(orders.filter(F.col("o_custkey") < q[1]))
     for k in range(1, 4):
@@ -1570,14 +1473,8 @@ def snapshot_skipping(spark, sf_dir):
         )
     lo, hi = m // 10, (3 * m) // 10
     pruned = tbl.read_pruned(spark, {"o_custkey": (lo, hi)})
-    return (
-        pruned.filter(F.col("o_custkey").between(lo, hi))
-        .groupBy("o_orderpriority")
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-        )
-    )
+    return totals(pruned.filter(F.col("o_custkey").between(lo, hi)),
+                  n="n", by=["o_orderpriority"])
 
 
 @query(
@@ -1627,21 +1524,18 @@ def snapshot_row_deletes(spark, sf_dir):
 
     Scale shape: the delete commit costs O(|deleted keys|) regardless
     of table size — no data file is opened, let alone rewritten. The
-    reader-side merge is ONE equi anti-join per delete column set,
-    hashed on the delete keys (small delete sets broadcast under AQE);
+    reader-side merge is ONE equi anti-join per delete column set;
+    delete files summing under ``tablecore._BC_DELETE_BYTES`` (64 MB)
+    are broadcast, larger sets take a join shuffled on the delete keys;
     compaction retires the read tax on the operator's schedule, not
     the eraser's. That trade — cheap-now, merged-on-read,
     materialized-later — is the only affordable erasure path when a
     key's rows are scattered across thousands of immutable files.
     """
-    import shutil
-
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    table_path = os.path.join(SCRATCH, "snapshot_row_del")
-    shutil.rmtree(table_path, ignore_errors=True)
-    tbl = SnapshotTable(table_path)
+    tbl = _fresh_table("snapshot_row_del")
     tbl.create(orders.filter(F.col("o_orderkey") % 3 != 0))
     tbl.append(orders.filter(F.col("o_orderkey") % 3 == 0))
     tbl.delete_where(
@@ -1654,15 +1548,9 @@ def snapshot_row_deletes(spark, sf_dir):
     )
     compact(tbl, spark)
 
-    def agg(df, v):
-        return df.agg(
-            F.count("*").alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-        ).select(F.lit(v).alias("version"), "n_orders", "revenue")
-
-    out = agg(tbl.read(spark, version=0), 0)
+    out = totals(tbl.read(spark, version=0), version=0)
     for v in range(1, 5):
-        out = out.unionAll(agg(tbl.read(spark, version=v), v))
+        out = out.unionAll(totals(tbl.read(spark, version=v), version=v))
     return out
 
 
@@ -1720,14 +1608,10 @@ def snapshot_position_deletes(spark, sf_dir):
     seekable (file, ordinal) form is what a production compactor
     consumes to rewrite only the affected files.
     """
-    import shutil
-
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    table_path = os.path.join(SCRATCH, "snapshot_pos_del")
-    shutil.rmtree(table_path, ignore_errors=True)
-    tbl = SnapshotTable(table_path)
+    tbl = _fresh_table("snapshot_pos_del")
     evens = orders.filter(F.col("o_orderkey") % 2 == 0)
     tbl.create(evens.repartition(1).sortWithinPartitions("o_orderkey"))
     tbl.append(
@@ -1736,7 +1620,7 @@ def snapshot_position_deletes(spark, sf_dir):
         .sortWithinPartitions("o_orderkey")
     )
     n_evens = evens.count()
-    target = os.path.relpath(tbl.files(0)[0], table_path)
+    target = os.path.relpath(tbl.files(0)[0], tbl.path)
     tbl.delete_positions(
         spark.range(0, n_evens, 5, numPartitions=1).select(
             F.lit(target).alias("file"), F.col("id").alias("pos")
@@ -1744,15 +1628,9 @@ def snapshot_position_deletes(spark, sf_dir):
     )
     compact(tbl, spark)
 
-    def agg(df, v):
-        return df.agg(
-            F.count("*").alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-        ).select(F.lit(v).alias("version"), "n_orders", "revenue")
-
-    out = agg(tbl.read(spark, version=0), 0)
+    out = totals(tbl.read(spark, version=0), version=0)
     for v in range(1, 4):
-        out = out.unionAll(agg(tbl.read(spark, version=v), v))
+        out = out.unionAll(totals(tbl.read(spark, version=v), version=v))
     return out
 
 
@@ -1787,14 +1665,10 @@ def snapshot_bloom_skipping(spark, sf_dir):
     id, document by hash) that neither partitioning nor min/max
     serves when the key is uniformly distributed.
     """
-    import shutil
-
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    table_path = os.path.join(SCRATCH, "snapshot_bloom_orders")
-    shutil.rmtree(table_path, ignore_errors=True)
-    tbl = SnapshotTable(table_path, bloom_cols=["o_orderkey"])
+    tbl = _fresh_table("snapshot_bloom_orders", bloom_cols=["o_orderkey"])
     tbl.create(orders.filter(F.col("o_orderkey") % 4 == 0))
     for c in range(1, 4):
         tbl.append(orders.filter(F.col("o_orderkey") % 4 == c))
@@ -1869,14 +1743,10 @@ def snapshot_branching(spark, sf_dir):
     concurrent publishers cannot lose updates (race pinned in
     tests/test_layout.py).
     """
-    import shutil
-
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    table_path = os.path.join(SCRATCH, "snapshot_branching")
-    shutil.rmtree(table_path, ignore_errors=True)
-    tbl = SnapshotTable(table_path)
+    tbl = _fresh_table("snapshot_branching")
     tbl.create(orders.filter(F.col("o_orderkey") % 5 <= 2))
     tbl.set_ref("main", 0)
     tbl.set_ref("wap", 0)
@@ -1886,24 +1756,13 @@ def snapshot_branching(spark, sf_dir):
     tbl.append(orders.filter(F.col("o_orderkey") % 5 == 4))
     tbl.set_ref("wap", 2)
 
-    def agg(df, step, ref):
-        return df.agg(
-            F.count("*").alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-        ).select(
-            F.lit(step).alias("step"), F.lit(ref).alias("ref"),
-            "n_orders", "revenue",
-        )
+    def agg(ref_name, step, ref):
+        return totals(tbl.read_ref(spark, ref_name), step=step, ref=ref)
 
-    out = agg(tbl.read_ref(spark, "main"), 0, "main@pre-publish")
-    out = out.unionAll(agg(tbl.read_ref(spark, "wap"), 1, "wap"))
+    out = agg("main", 0, "main@pre-publish").unionAll(agg("wap", 1, "wap"))
     tbl.fast_forward("main", "wap")
-    out = out.unionAll(
-        agg(tbl.read_ref(spark, "main"), 2, "main@post-publish")
-    )
-    return out.unionAll(
-        agg(tbl.read_ref(spark, "audited-base"), 3, "tag:audited-base")
-    )
+    out = out.unionAll(agg("main", 2, "main@post-publish"))
+    return out.unionAll(agg("audited-base", 3, "tag:audited-base"))
 
 
 @query(
@@ -1943,14 +1802,10 @@ def snapshot_cluster_compact(spark, sf_dir):
     O(selectivity · files), and time travel keeps the pre-cluster
     layout readable.
     """
-    import shutil
-
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    table_path = os.path.join(SCRATCH, "snapshot_cluster")
-    shutil.rmtree(table_path, ignore_errors=True)
-    tbl = SnapshotTable(table_path)
+    tbl = _fresh_table("snapshot_cluster")
     tbl.create(orders.filter(F.col("o_orderkey") % 4 == 0))
     for c in range(1, 4):
         tbl.append(orders.filter(F.col("o_orderkey") % 4 == c))
@@ -1958,16 +1813,8 @@ def snapshot_cluster_compact(spark, sf_dir):
     compact(tbl, spark, target_files=8, cluster_by=["o_custkey"])
 
     def band(df, phase):
-        return (
-            df.filter(F.col("o_custkey").between(100, 400))
-            .agg(
-                F.count("*").alias("n_orders"),
-                F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-            )
-            .select(
-                F.lit(phase).alias("phase"), "n_orders", "revenue"
-            )
-        )
+        return totals(df.filter(F.col("o_custkey").between(100, 400)),
+                      phase=phase)
 
     pre = band(
         tbl.read_pruned(
@@ -2035,14 +1882,10 @@ def snapshot_branch_diff(spark, sf_dir):
     upsert's own files, so the exceptAll diff is proportional to the
     CHANGED rows once file-level pruning skips the shared base files.
     """
-    import shutil
-
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    table_path = os.path.join(SCRATCH, "snapshot_branch_diff")
-    shutil.rmtree(table_path, ignore_errors=True)
-    tbl = SnapshotTable(table_path)
+    tbl = _fresh_table("snapshot_branch_diff")
     tbl.create(orders.filter(F.col("o_orderkey") % 4 != 0))
     tbl.set_ref("main", 0)
     staged = orders.filter(
@@ -2092,16 +1935,12 @@ def snapshot_restore(spark, sf_dir):
     blast-radius analysis afterwards is `snapshot_changes` between
     the bad version and its neighbors.
     """
-    import shutil
-
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus"
     )
     v0_df = orders.filter(F.col("o_orderkey") % 3 == 0)
     bad = v0_df.withColumn("o_orderstatus", F.lit("CORRUPT"))
-    table_path = os.path.join(SCRATCH, "snapshot_restore")
-    shutil.rmtree(table_path, ignore_errors=True)
-    tbl = SnapshotTable(table_path)
+    tbl = _fresh_table("snapshot_restore")
     tbl.create(v0_df)
     tbl.overwrite(bad)
     tbl.restore(0)
@@ -2146,8 +1985,6 @@ def merge_cdc_apply(spark, sf_dir):
     O(|changes|) with zero data-file rewrites, and the read-side
     merge stays the one anti-join pass of the merge-on-read contract.
     """
-    import shutil
-
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus"
     )
@@ -2163,9 +2000,7 @@ def merge_cdc_apply(spark, sf_dir):
         .otherwise(F.lit("U"))
         .alias("op"),
     )
-    table_path = os.path.join(SCRATCH, "merge_cdc_apply")
-    shutil.rmtree(table_path, ignore_errors=True)
-    tbl = SnapshotTable(table_path)
+    tbl = _fresh_table("merge_cdc_apply")
     tbl.create(v0_df)
     tbl.apply_changes(changes, ["o_orderkey"], op_col="op")
     return tbl.read(spark).select("o_orderkey", "o_orderstatus")

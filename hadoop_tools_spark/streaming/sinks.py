@@ -57,19 +57,23 @@ class IdempotentBatchSink:
             return  # replayed micro-batch: already durable, skip
         vs = self.table.versions()
         v = vs[-1] + 1 if vs else 0
-        prev = self.table._manifest(vs[-1])["files"] if vs else []
+        man = self.table._manifest(vs[-1]) if vs else {}
         # pid-unique staging dir (the SnapshotTable.create rule): a
         # zombie writer racing this version must never share — and
         # mode('overwrite')-clobber — the winner's staged files; the
         # CAS publish then rejects the zombie with its own files
         # intact and the committed version's data untouched
-        files = prev + self.table._stage(
-            batch_df, f"{v:05d}-{os.getpid()}"
-        )
+        stats = self.table._stage_stats(batch_df, f"{v:05d}-{os.getpid()}")
         # put-if-absent publish with the batch id recorded; a streaming
         # query has one writer, so a conflict means a zombie executor
-        # from a failed run beat us — surfacing it is correct
-        self.table._publish(files, v, extra={"batch_id": batch_id})
+        # from a failed run beat us — surfacing it is correct. The
+        # min/max stats ride along as in a batch append, so
+        # ``read_pruned`` can skip streamed files too.
+        self.table._publish(
+            man.get("files", []) + list(stats), v,
+            extra={"batch_id": batch_id,
+                   "stats": {**man.get("stats", {}), **stats}},
+        )
         self._committed.add(batch_id)
 
 

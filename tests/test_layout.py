@@ -379,10 +379,75 @@ def test_snapshot_delete_null_keys_delete_nothing(spark, sf_dir, tmp_path):
     assert tbl.read(spark).count() == n
 
 
+def test_iceberg_delete_null_keys_delete_null_rows(spark, tmp_path):
+    """The other side of the rule above: an Iceberg equality delete
+    matches null-safe (spec), so a NULL delete key removes exactly the
+    NULL-keyed rows. The snapshot table over the same rows keeps them,
+    because it hands the shared merge a delete frame without its
+    NULL-key rows."""
+    from hadoop_tools_spark.sources.iceberg import IcebergReader, IcebergTable
+    from hadoop_tools_spark.sources.snapshots import SnapshotTable
+
+    rows = spark.createDataFrame(
+        [(1, "a"), (2, None), (3, None), (4, "b")], "k long, s string"
+    )
+    null_key = spark.createDataFrame([(None,)], "s string")
+    path = str(tmp_path / "ice_nulldel")
+    tbl = IcebergTable.create(spark, path, rows)
+    tbl.delete_where_equal(spark, null_key)
+    got = sorted(r.k for r in IcebergReader(path).read(spark).collect())
+    assert got == [1, 4]
+
+    snap = SnapshotTable(str(tmp_path / "snap_nulldel"))
+    snap.create(rows)
+    snap.delete_where(null_key)
+    assert sorted(r.k for r in snap.read(spark).collect()) == [1, 2, 3, 4]
+
+
+def test_snapshot_position_deletes_under_encoded_path(spark, tmp_path):
+    """Spark reports a scan's file path percent-encoded: a table
+    directory with a space must still match its position deletes, so
+    10 deleted ordinals of a 100-row file leave 90 rows."""
+    from hadoop_tools_spark.sources.snapshots import SnapshotTable
+
+    tbl = SnapshotTable(str(tmp_path / "with space" / "posdel"))
+    tbl.create(spark.range(100).repartition(1).sortWithinPartitions("id"))
+    target = os.path.relpath(tbl.files(0)[0], tbl.path)
+    tbl.delete_positions(
+        spark.range(0, 100, 10, numPartitions=1).select(
+            F.lit(target).alias("file"), F.col("id").alias("pos")
+        )
+    )
+    got = tbl.read(spark)
+    assert got.count() == 90
+    assert got.filter(F.col("id") % 10 == 0).count() == 0
+
+
+def test_snapshot_partitioned_commit_rejects_empty_string(spark, tmp_path):
+    """Hive staging writes '' and NULL partition values to the same
+    directory, so a snapshot partitioned commit fails closed on '' with
+    the same ValueError the Delta and Iceberg writers raise, before
+    anything is published. NULL partition values keep their home."""
+    from hadoop_tools_spark.sources.snapshots import SnapshotTable
+
+    df = spark.createDataFrame(
+        [(1, "x"), (2, ""), (3, None)], "k long, p string"
+    )
+    tbl = SnapshotTable(str(tmp_path / "emptypart"))
+    tbl.create(df.filter("k = 1"))
+    with pytest.raises(ValueError, match="empty-string partition"):
+        tbl.append(df.filter("k > 1"), partition_by=["p"])
+    assert tbl.versions() == [0]
+    tbl.append(df.filter("k = 3"), partition_by=["p"])
+    got = sorted((r.k, r.p) for r in tbl.read(spark).collect())
+    assert got == [(1, "x"), (3, None)]
+
+
 def test_snapshot_pruned_read_applies_deletes(spark, sf_dir, tmp_path):
     """read_pruned composes file skipping with the merge-on-read
     anti-join: pruning must never resurrect deleted rows."""
     from hadoop_tools_spark.sources.snapshots import SnapshotTable
+    from hadoop_tools_spark.sources.tablecore import PATH, POS, SEQ
 
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -409,7 +474,7 @@ def test_snapshot_pruned_read_applies_deletes(spark, sf_dir, tmp_path):
         ).select("o_orderkey").collect()
     }
     assert got == want
-    assert "__seq" not in pruned.columns
+    assert not {PATH, POS, SEQ} & set(pruned.columns)
 
 
 def test_snapshot_position_deletes_bind_to_named_file(spark, sf_dir, tmp_path):

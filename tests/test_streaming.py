@@ -353,6 +353,26 @@ def test_idempotent_sink_exactly_once(spark, sf_dir, staged, tmp_path):
     assert sink.table.read(spark).count() == n1 + 7
 
 
+def test_idempotent_sink_records_file_stats(spark, tmp_path):
+    """Each sink batch records min/max stats for its own files and
+    carries the earlier batches' forward, so ``pruned_files`` skips
+    streamed files like batch-appended ones."""
+    import os
+
+    from hadoop_tools_spark.streaming.sinks import IdempotentBatchSink
+
+    sink = IdempotentBatchSink(str(tmp_path / "stats_table"))
+    sink(spark.range(0, 100).coalesce(1), 0)
+    sink(spark.range(1000, 1100).coalesce(1), 1)
+    tbl = sink.table
+    man = tbl._manifest(tbl.latest_version())
+    assert len(man["files"]) == 2
+    assert set(man["stats"]) == set(man["files"])
+    kept = tbl.pruned_files({"id": (1000, 1099)})
+    assert kept == [os.path.join(tbl.path, man["files"][1])]
+    assert tbl.read_pruned(spark, {"id": (1000, 1099)}).count() == 100
+
+
 def test_stateful_checkpoint_restart_recovers_state(
     spark, sf_dir, staged, tmp_path
 ):

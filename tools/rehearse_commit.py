@@ -55,7 +55,7 @@ def main() -> int:
 
     big = orders.repartition(n_files)
     t0 = time.time()
-    entries = tbl._stage_data_files(spark, big)
+    entries = tbl._stage(spark, big)
     t_stage = time.time() - t0
     t0 = time.time()
     tbl.commit([(entries, 0, 0)])
